@@ -20,7 +20,7 @@ from dataclasses import dataclass, field
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .constants import NODATA
 from .functions import polyline as pl
@@ -37,6 +37,13 @@ FORMATS_IN = ("geojson", "point", "polyline", "polygon",
               "encodedpolyline", "encodedpolyline5", "encodedpolyline6")
 FORMATS_OUT = ("geojson", "point", "polyline", "encodedpolyline", "colorpolygon")
 DATASETS = ("srtm",)  # reference validator.py:14-23 (``dataset ∈ [srtm]``)
+
+#: request polygon table; a StructType, so no DDL string is parsed per call
+POLYGON_SCHEMA = T.StructType([
+    T.StructField("poly_id", T.LongType()),
+    T.StructField("ring", T.ArrayType(T.StructType([
+        T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]))),
+])
 
 
 def validate_dataset(dataset: str) -> str:
@@ -202,6 +209,14 @@ class ElevationService:
             self._pix.count()
         return self._pix
 
+    def _polygon_df(self, ring) -> DataFrame:
+        return self.spark.createDataFrame(
+            pd.DataFrame({"poly_id": [0], "ring": [
+                [{"lon": x, "lat": y} for x, y in ring]
+            ]}),
+            schema=POLYGON_SCHEMA,
+        )
+
     # -- POST/GET /elevation/point (views.py:128-189) ----------------------
     def point(self, geometry, format_in: str = "point",
               format_out: str = "geojson", dataset: str = "srtm") -> dict:
@@ -262,18 +277,21 @@ class ElevationService:
             pd.DataFrame({"line_id": [0], "x1": [x1], "y1": [y1],
                           "x2": [x2], "y2": [y2]})
         )
-        verts = (
+        # the vertex count is bounded by the line's length: ordering the
+        # collected rows here saves the range-sort job and exchange a
+        # Spark orderBy adds (seq is unique, so the order is total)
+        verts = sorted(
             line_vertices_elevation(lines, self.images_df,
                                     pix_index_df=self._pix_index())
-            .orderBy("seq")
-            .select("x", "y", F.coalesce(F.col("z"), F.lit(NODATA)).alias("z"))
-            .collect()
+            .select("seq", "x", "y", "z").collect(),
+            key=lambda r: r["seq"],
         )
         if not verts:
             raise _err_geometry(
                 "The requested geometry is outside the bounds of srtm"
             )
-        out = [(r["x"], r["y"], int(r["z"])) for r in verts]
+        out = [(r["x"], r["y"], NODATA if r["z"] is None else int(r["z"]))
+               for r in verts]
         # F6 zero-length-line fixup (views.py:63-68): one unique vertex → Point
         if len({(x, y) for x, y, _ in out}) == 1:
             x, y, z = out[0]
@@ -302,17 +320,15 @@ class ElevationService:
         gtype, ring = parse_geometry(geometry, format_in)
         if gtype != "Polygon":
             raise _err_geometry("Polygon endpoint requires a Polygon geometry")
-        polys = self.spark.createDataFrame(
-            pd.DataFrame({"poly_id": [0], "ring": [
-                [{"lon": x, "lat": y} for x, y in ring]
-            ]}),
-            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
-        )
+        polys = self._polygon_df(ring)
         # spread=False: one interactive polygon — the batch-replay
         # repartition would only add an exchange of mostly-empty tasks
-        px = (polygon_pixels(polys, self.images_df, spread=False)
-              .orderBy("x", "y")                      # W2 ordered dump
-              .select("x", "y", "z").collect())
+        # W2 ordered dump, ordered on the driver: the rows are collected
+        # anyway, and a Spark orderBy would add a range-sort job and an
+        # exchange ((x, y) is unique per pixel, so the order is total)
+        px = sorted(polygon_pixels(polys, self.images_df, spread=False)
+                    .select("x", "y", "z").collect(),
+                    key=lambda r: (r["x"], r["y"]))
         if not px:
             raise _err_geometry(
                 "The requested geometry is outside the bounds of srtm"
@@ -326,12 +342,7 @@ class ElevationService:
         gtype, ring = parse_geometry(geometry, format_in)
         if gtype != "Polygon":
             raise _err_geometry("Polygon endpoint requires a Polygon geometry")
-        polys = self.spark.createDataFrame(
-            pd.DataFrame({"poly_id": [0], "ring": [
-                [{"lon": x, "lat": y} for x, y in ring]
-            ]}),
-            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
-        )
+        polys = self._polygon_df(ring)
         feats = polygon_color_features(polys, self.images_df,
                                        spread=False).toPandas()
         if feats.empty:

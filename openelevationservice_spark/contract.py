@@ -97,7 +97,7 @@ def _sql_tile(lon: str, lat: str) -> tuple[str, str]:
 
 
 def _sql_pixel(lon: str, lat: str, tx: str, ty: str) -> tuple[str, str]:
-    """(ix, iy) exactly as operators.point.with_pixel_indices computes them
+    """(ix, iy) exactly as operators.point.pixel_index_cols computes them
     (per-tile ul_x/ul_y, like the tile index built from captions)."""
     ul_x = f"({_W0} + ({tx}) * {_TD})"
     ul_y = f"({_WY0} - ({ty}) * {_TD})"

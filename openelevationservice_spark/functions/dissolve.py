@@ -173,11 +173,13 @@ def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
 
 
 #: field widths of the batched cell key: band << 46 | ly << 23 | lx.
-#: Local (bbox-shifted) coords are far inside 23 bits; band index is the
-#: Arrow-batch row index (< 2^17 rows per batch by Arrow batch sizing).
+#: Local (bbox-shifted) coords are far inside 23 bits; the band index
+#: gets 16 bits (the edge key puts the direction in bits 62..63), so one
+#: pass covers at most 2^16 bands and larger batches run in chunks.
 _BSH_BAND = 46
 _BSH_Y = 23
 _BMASK = (1 << _BSH_Y) - 1
+_MAX_BANDS = 1 << 16
 
 
 def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
@@ -192,11 +194,10 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     rule as :func:`_trace_loops_keys`, run over all bands at once by
     packing the band index into the cell key (probes never cross bands
     — a borrow out of the coordinate fields lands on a nonexistent
-    key).  The per-edge Python cycle walk is replaced by min-label
-    pointer doubling over the successor permutation — O(E log L) numpy
-    gathers (L = longest ring) instead of a per-edge interpreted chase,
-    which owned the dissolve kernel's CPU at bench volume (~4 edges per
-    ring, ~190 rings per band: the walk cost ~26 s CPU per 23k bands).
+    key).  Cycles are labelled by min-label pointer doubling over the
+    successor permutation — O(E log L) numpy gathers (L = longest ring),
+    no per-edge Python walk.  The band field holds 2^16 bands; more run
+    as consecutive chunks of that size.
 
     Ring VERTEX SEQUENCES are never materialized, so this path computes
     shells/holes/areas only; ``area2_all`` sums every cycle (shells +
@@ -207,10 +208,17 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     geometry.  Zero-area degenerate cycles count as neither, exactly
     like the ring path.
     """
-    if n_bands > (1 << 16):
-        # band index must fit the 16-bit field of the packed edge key;
-        # Arrow batches cap rows at 65536, so real callers never hit this
-        raise ValueError(f"batch_invariants: {n_bands} bands > 2^16 per batch")
+    if n_bands > _MAX_BANDS:
+        # the band index must fit the 16-bit field of the packed edge
+        # key: run consecutive chunks of at most 2^16 bands
+        parts = []
+        for b0 in range(0, n_bands, _MAX_BANDS):
+            b1 = min(b0 + _MAX_BANDS, n_bands)
+            c0, c1 = int(seg[b0]), int(seg[b1])
+            parts.append(batch_invariants(
+                np.asarray(band[c0:c1]) - b0, gx[c0:c1], gy[c0:c1],
+                b1 - b0, np.asarray(seg[b0:b1 + 1]) - c0))
+        return tuple(np.concatenate(cols) for cols in zip(*parts))
     n_cells = len(gx)
     if n_cells == 0:
         z = np.zeros(n_bands, dtype=np.int64)

@@ -9,18 +9,25 @@ polygons, then **client-side** min/max/avg, 23-band bucketing
     height_base = ceil(color_range * range_div + min)
 
 and a shapely ``unary_union`` per band.  At continental polygons that
-pixel list explodes driver memory (SURVEY.md §3.3) — here the whole
-pipeline stays distributed AND runs-resident (r5): scanline runs →
-stats off the run arrays (G1, JVM array_min/array_max — no pixel
-explode) → vectorized band-split kernel → packed band-subruns →
-hash-repartition by **(poly_id, height_base)** (bands dissolve
-independently, exactly as the reference unions per band — so the
-largest polygon's bands spread across tasks) → one ``array<long>``
-subrun row per band (co-partitioned ``collect_list``, see
-:func:`_banded_subruns`) → exact grid dissolve kernel (G3) over each
-band row.  Only the final FeatureCollection is collected.  The
-exploded-pixel shape survives as the asserted parity twin
-(:func:`_banded_cells`, ``cells_shape="pixels"`` / ``pixels_df=``).
+pixel list explodes driver memory (SURVEY.md §3.3); here the whole
+pipeline stays distributed::
+
+    polygons → rasterizer: one packed run blob per (polygon, tile),
+               with the pair's min/max z
+             → per-polygon min/max over those scalars, broadcast back
+             → band-split kernel: runs → band subruns, partially
+               aggregated per (polygon, band) of each Arrow batch into
+               one binary buffer
+             → exchange on (poly_id, height_base), collect_list of the
+               buffers: one row per band
+             → exact grid dissolve kernel (G3) per band row
+
+Bands dissolve independently, exactly as the reference unions per band,
+so the largest polygon's bands spread across tasks.  Only the final
+FeatureCollection is collected.  The JVM-array run shape
+(``runs_df=`` / ``cells_shape="runs"``) and the exploded-pixel shape
+(``pixels_df=`` / ``cells_shape="pixels"``) are kept as asserted
+parity twins.
 """
 
 from __future__ import annotations
@@ -340,17 +347,17 @@ def _gather_bands(subs: DataFrame) -> DataFrame:
 
 
 def _banded_subruns_blob(blobs: DataFrame, num_ranges: int) -> DataFrame:
-    """Blob-resident successor of :func:`_banded_subruns` (the r6
-    default): stats aggregate over the blob table's pruned scalar
-    min/max columns (no array re-fold, no array cache scan), broadcast
-    back, and the band-split unpacks the packed runs in Python —
-    z values cross the JVM boundary exactly twice, both times as one
-    binary buffer memcpy."""
+    """One row per (poly_id, height_base) from the run blobs: stats
+    aggregate over the blob table's scalar per-pair min/max columns (no
+    array fold), broadcast back, and the band-split unpacks the packed
+    runs in Python — z values cross the JVM boundary exactly twice,
+    both times as one binary buffer memcpy.  The kernel reads its
+    columns by name, so the join output goes to it unpruned (the
+    per-pair run_min/run_max scalars ride along)."""
     stats = (blobs.groupBy("poly_id")
              .agg(F.min("run_min").alias("min_z"),
                   F.max("run_max").alias("max_z")))
-    j = (blobs.join(F.broadcast(stats), "poly_id")
-         .select("poly_id", "blob", "min_z", "max_z"))
+    j = blobs.join(F.broadcast(stats), "poly_id")
     subs = j.mapInPandas(_band_subrun_kernel_blob(num_ranges), SUBRUN_SCHEMA)
     return _gather_bands(subs)
 
@@ -529,7 +536,10 @@ def _invariants_partition_subs(batches):
     hole-free bands — the overwhelming case for contiguous elevation
     bands — never build rings at all.  Results are identical by
     construction and asserted against the per-band path in
-    tests/test_polygon.py."""
+    tests/test_geometry_dissolve.py::test_batch_invariants_matches_per_band.
+    An Arrow batch of more than 2^16 bands is processed in chunks (see
+    ``batch_invariants``), so ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    may take any value."""
     from ..functions.dissolve import batch_invariants
 
     cols = [f.name for f in INVARIANT_SCHEMA.fields]

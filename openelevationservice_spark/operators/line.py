@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..constants import COORD_PRECISION, NODATA
+from ..constants import COORD_PRECISION
 from ..sources.tiles import tile_index
-from .point import join_tiles, with_pixel_indices
-from .sample import gather_z
+from .point import join_tiles, sample_joined
+from .sample import pixel_index
 
 
 def densify_lines(lines_df: DataFrame) -> DataFrame:
@@ -206,47 +206,49 @@ def densify_lines_explode(lines_df: DataFrame) -> DataFrame:
     ``explode(sequence(0, cnt-1))`` generates the vertex index rows and
     every coordinate is plain post-explode Column arithmetic: no Arrow
     boundary (the arrow twin pays an Arrow→InternalRow conversion per
-    OUTPUT vertex in the JVM — allocation-bound, measured 0.42 scaling
-    efficiency 2→8 cores), no interpreted higher-order functions (the
-    array-expression twin is CodegenFallback).  9× the 2-core
-    throughput of the arrow twin at bench volume and bit-identical
-    output (same IEEE ops in the same order; asserted in
-    tests/test_line.py against both twins).
+    OUTPUT vertex in the JVM), no interpreted higher-order functions
+    (the array-expression twin is CodegenFallback).  Output is
+    bit-identical to both twins (same IEEE ops in the same order;
+    asserted in tests/test_line.py).
 
-    Every intermediate scalar goes through its own ``select`` stage so
-    it materializes ONCE per row as a named attribute: composing the
-    Column objects directly would duplicate the whole subtree at every
-    reference (expression trees are built by value), and Spark's
-    codegen common-subexpression elimination does not reach inside
-    conditional branches — the naïvely-composed form measured 10×
-    slower than the arrow twin instead of faster.  Catalyst's
-    CollapseProject keeps non-cheap multi-referenced aliases staged, so
-    the chained selects survive optimization.
+    The per-line scalars (step, fraction, vertex count) are one
+    projection below the explode: they run once per LINE, so the
+    subtrees their Column composition repeats cost nothing measurable,
+    while every extra DataFrame step costs a plan re-analysis per call.
+    After the explode every row is a VERTEX, so there each value goes
+    through its own ``select`` stage and materializes ONCE per row as a
+    named attribute: composing the Column objects directly would
+    duplicate the whole subtree at every reference (expression trees
+    are built by value), and Spark's codegen common-subexpression
+    elimination does not reach inside conditional branches — the
+    composed form runs several times slower.  Catalyst's CollapseProject
+    keeps non-cheap multi-referenced aliases staged, so the chained
+    selects survive optimization.
     """
+    x1, y1, x2, y2 = F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2")
+    dx = x2 - x1
+    dy = y2 - y1
+    length = F.sqrt(dx * dx + dy * dy)
+    frac = F.when(length == 0.0, F.lit(1.0)).otherwise(
+        F.least(F.lit(1.0), F.lit(COORD_PRECISION) / length))
+    n_interp = (
+        F.when(length == 0.0, F.lit(0))
+        .otherwise(F.floor(F.lit(1.0) / frac))
+    ).cast("int")
+    t_last = n_interp * frac
+    tail_dropped = (
+        (t_last >= 1.0)
+        | ((x1 + t_last * dx == x2) & (y1 + t_last * dy == y2))
+    )
+    n_keep = F.when(n_interp >= 1,
+                    n_interp - F.when(tail_dropped, 1).otherwise(0)
+                    ).otherwise(F.lit(0))
+    p2_kept = ((x2 != x1) | (y2 != y1)).cast("int")
     d = lines_df.select(
         "line_id", "x1", "y1", "x2", "y2",
-        (F.col("x2") - F.col("x1")).alias("_dx"),
-        (F.col("y2") - F.col("y1")).alias("_dy"),
+        dx.alias("_dx"), dy.alias("_dy"), frac.alias("_frac"),
+        (F.lit(1) + n_keep + p2_kept).alias("_cnt"),
     )
-    d = d.select("*", F.sqrt(F.col("_dx") * F.col("_dx")
-                             + F.col("_dy") * F.col("_dy")).alias("_len"))
-    d = d.select("*", F.when(F.col("_len") == 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), F.lit(COORD_PRECISION) / F.col("_len"))).alias("_frac"))
-    d = d.select("*", (
-        F.when(F.col("_len") == 0.0, F.lit(0))
-        .otherwise(F.floor(F.lit(1.0) / F.col("_frac")))
-    ).cast("int").alias("_ni"))
-    d = d.select("*", (F.col("_ni") * F.col("_frac")).alias("_tl"))
-    tail_dropped = (
-        (F.col("_tl") >= 1.0)
-        | ((F.col("x1") + F.col("_tl") * F.col("_dx") == F.col("x2"))
-           & (F.col("y1") + F.col("_tl") * F.col("_dy") == F.col("y2")))
-    )
-    n_keep = F.when(F.col("_ni") >= 1,
-                    F.col("_ni") - F.when(tail_dropped, 1).otherwise(0)
-                    ).otherwise(F.lit(0))
-    p2_kept = ((F.col("x2") != F.col("x1")) | (F.col("y2") != F.col("y1"))).cast("int")
-    d = d.select("*", (F.lit(1) + n_keep + p2_kept).alias("_cnt"))
     e = d.select(
         "line_id", "x1", "y1", "x2", "y2", "_dx", "_dy", "_frac", "_cnt",
         F.explode(F.sequence(F.lit(0), F.col("_cnt") - 1)).alias("_j"),
@@ -291,30 +293,16 @@ def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
     """
     verts = _DENSIFY_IMPLS[densify_impl](lines_df)
     if gather_strategy == "jvm":
-        from .sample import gather_z_jvm, pixel_index
-
         idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-        j = join_tiles(verts, idx, how=how, index_strategy=index_strategy,
-                       lon="x", lat="y", extra_cols=("pix",))
-        j = with_pixel_indices(j, lon="x", lat="y")
-        j = j.select("line_id", "seq", "x", "y", "dist",
-                     "image_id", "w", "h", "ix", "iy", "pix")
-        out = gather_z_jvm(j).drop("w", "h")
+        extra = ("pix",)
     else:
         idx = tile_index(images_df)
-        j = join_tiles(verts, idx, how=how, index_strategy=index_strategy,
-                       lon="x", lat="y")
-        j = with_pixel_indices(j, lon="x", lat="y")
-        # dist came with the vertex structs — prune the tile metadata so
-        # the Arrow batches stay narrow
-        j = j.select("line_id", "seq", "x", "y", "dist", "image_id", "ix", "iy")
-        out = gather_z(j, images_df, strategy=gather_strategy, grids_bc=grids_bc)
-    z = F.when(F.col("image_id").isNotNull(),
-               F.coalesce(F.col("z"), F.lit(NODATA))).otherwise(F.lit(None))
-    return (
-        out.withColumn("z", z.cast("int"))
-        .select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")
-    )
+        extra = ()
+    j = join_tiles(verts, idx, how=how, index_strategy=index_strategy,
+                   lon="x", lat="y", extra_cols=extra)
+    return sample_joined(j, ["line_id", "seq", "x", "y", "z", "dist",
+                             "image_id", "ix", "iy"], "x", "y",
+                         gather_strategy, images_df, grids_bc=grids_bc)
 
 
 def line_elevation(lines_df: DataFrame, images_df: DataFrame,

@@ -24,22 +24,57 @@ assignment.  Out-of-coverage points get no row under ``how='inner'``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import NODATA
 from ..functions.cells import cell_id_col
 from ..sources.tiles import tile_index
-from .sample import gather_z
+from .sample import gather_z, pixel_index, z_jvm_col
 
 
-def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
+def pixel_index_cols(lon: str = "lon", lat: str = "lat") -> dict[str, Column]:
     """ix/iy = ST_Value's floor pixel-index arithmetic, as Columns."""
-    return df.withColumn(
-        "ix", F.floor((F.col(lon) - F.col("ul_x")) / F.col("px")).cast("int")
-    ).withColumn(
-        "iy", F.floor((F.col("ul_y") - F.col(lat)) / F.col("px")).cast("int")
-    )
+    return {
+        "ix": F.floor((F.col(lon) - F.col("ul_x")) / F.col("px")).cast("int"),
+        "iy": F.floor((F.col("ul_y") - F.col(lat)) / F.col("px")).cast("int"),
+    }
+
+
+def elevation_z(z: Column) -> Column:
+    """Output z: NODATA-coalesced for rows that hit a tile (the
+    reference's ``coalesce(ST_Value(...), -32768)``), NULL for rows that
+    hit none."""
+    return F.when(F.col("image_id").isNotNull(),
+                  F.coalesce(z, F.lit(NODATA))).otherwise(F.lit(None)).cast("int")
+
+
+#: columns sample_joined adds to a tile join's row
+SAMPLED = ("image_id", "ix", "iy", "z")
+
+
+def sample_joined(joined: DataFrame, out: list[str], lon: str, lat: str,
+                  gather_strategy: str, images_df: DataFrame,
+                  grids_bc=None) -> DataFrame:
+    """Pixel indices + z gather + output z over a tile join, returning
+    the columns ``out`` names: the caller's columns and :data:`SAMPLED`.
+
+    The JVM gather is ONE projection: the ix/iy expressions feed both
+    their output columns and the z sample.  They are a few double ops,
+    so evaluating them again inside the sample costs less per row than
+    another projection costs per call."""
+    pix = pixel_index_cols(lon, lat)
+    if gather_strategy == "jvm":
+        cols = {**{n: c.alias(n) for n, c in pix.items()},
+                "z": elevation_z(z_jvm_col(pix["ix"], pix["iy"])).alias("z")}
+        return joined.select(*(cols.get(c, c) for c in out))
+    # prune tile metadata before the Arrow boundary — the gather only
+    # needs (image_id, ix, iy) plus the caller's columns
+    keep = [c for c in out if c not in SAMPLED]
+    j = joined.select(*keep, "image_id", *(c.alias(n) for n, c in pix.items()))
+    g = gather_z(j, images_df, strategy=gather_strategy, grids_bc=grids_bc)
+    return g.select(*(elevation_z(F.col("z")).alias("z") if c == "z" else c
+                      for c in out))
 
 
 def join_tiles(points_df: DataFrame, index_df: DataFrame, how: str = "inner",
@@ -78,23 +113,12 @@ def point_elevation(points_df: DataFrame, images_df: DataFrame,
     decode work across queries.
     """
     if gather_strategy == "jvm":
-        from .sample import gather_z_jvm, pixel_index
-
         idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-        j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
-                       lon=lon, lat=lat, extra_cols=("pix",))
-        j = with_pixel_indices(j, lon=lon, lat=lat)
-        j = j.select(*points_df.columns, "image_id", "w", "h", "ix", "iy", "pix")
-        out = gather_z_jvm(j).drop("w", "h")
+        extra = ("pix",)
     else:
         idx = tile_index(images_df)
-        j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
-                       lon=lon, lat=lat)
-        j = with_pixel_indices(j, lon=lon, lat=lat)
-        # prune tile metadata before the Arrow boundary — the gather only
-        # needs (image_id, ix, iy) plus the caller's columns
-        j = j.select(*points_df.columns, "image_id", "ix", "iy")
-        out = gather_z(j, images_df, strategy=gather_strategy, grids_bc=grids_bc)
-    z = F.when(F.col("image_id").isNotNull(),
-               F.coalesce(F.col("z"), F.lit(NODATA))).otherwise(F.lit(None))
-    return out.withColumn("z", z.cast("int"))
+        extra = ()
+    j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
+                   lon=lon, lat=lat, extra_cols=extra)
+    return sample_joined(j, [*points_df.columns, *SAMPLED], lon, lat,
+                         gather_strategy, images_df, grids_bc=grids_bc)

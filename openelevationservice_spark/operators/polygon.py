@@ -35,44 +35,32 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
+from ..constants import NCELL_X, NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
 from ..functions import image_codec
 from ..functions.cells import linear_id_col
 from ..functions.geometry import points_in_ring, ring_to_arrays
 from ..sources.tiles import tile_index
 
 
-def polygons_with_bbox(polygons_df: DataFrame) -> DataFrame:
-    """bbox columns from the ring array — pure Column arithmetic."""
-    lons = F.transform("ring", lambda p: p["lon"])
-    lats = F.transform("ring", lambda p: p["lat"])
-    return (
-        polygons_df
-        .withColumn("min_x", F.array_min(lons))
-        .withColumn("max_x", F.array_max(lons))
-        .withColumn("min_y", F.array_min(lats))
-        .withColumn("max_y", F.array_max(lats))
-    )
-
-
 def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
                       index_strategy: str = "broadcast",
                       spread: bool = True) -> DataFrame:
-    """Polygon × tile join via cover-cell explode (SURVEY.md §2.3 J3).
+    """Polygon × tile join via cover-cell explode (SURVEY.md §2.3 J3):
+    one row per (polygon, tile) pair with poly_id, ring and every column
+    of ``index_df`` (a :func:`~..sources.tiles.tile_index`).  The
+    rasterizer kernels read their columns by name, so the handful of
+    unused tile scalars crosses Arrow rather than cost a pruning step
+    on every call.
 
-    ``index_strategy="broadcast"`` (default, r6 orientation) broadcasts
-    the exploded (polygon, cell) pairs — rings + ids, bounded by the
-    query batch — INTO the tile scan.  vs the former
-    broadcast-the-tile-bytes orientation this removes the pair-side
-    spread exchange, shrinks the broadcast ~5× (rings, not pixel
-    payloads), and gives the rasterizer tile-locality (each tile's
-    bytes reach exactly the partition that scans them, each decoded
-    once): measured 2.16 → 0.98 s for the bench blob build, identical
-    output multiset.  It is also the orientation that survives a
+    ``index_strategy="broadcast"`` (default) broadcasts the exploded
+    (polygon, cell) pairs — rings + ids, bounded by the query batch —
+    INTO the tile scan: no pair-side exchange, and each tile's bytes
+    reach exactly the partition that scans them, so the rasterizer
+    decodes each tile once.  It is also the orientation that survives a
     10^12-image world — the tile table can never be broadcast, a
     request's polygons always can; batches past broadcast size use
     ``index_strategy="shuffle"`` (both sides exchanged on cell_id).
@@ -82,21 +70,27 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
     it), where an extra full exchange into mostly-empty tasks only
     adds latency.  The broadcast orientation never needs the spread:
     kernel parallelism comes from the tile-table scan.
+
+    The cover cells are two projections, one explode per axis (a
+    projection holds one generator): the ring's bbox folds into the
+    column explode, and the cell ids of one column are the arithmetic
+    sequence ``cy * NCELL_X + cx`` with step NCELL_X.
     """
-    p = polygons_with_bbox(polygons_df)
-    cx0 = F.floor((F.col("min_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
-    cx1 = F.floor((F.col("max_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
-    cy0 = F.floor((F.lit(WORLD_Y0) - F.col("max_y")) / F.lit(TILE_DEG)).cast("long")
-    cy1 = F.floor((F.lit(WORLD_Y0) - F.col("min_y")) / F.lit(TILE_DEG)).cast("long")
-    p = (
-        p.withColumn("cx", F.explode(F.sequence(cx0, cx1)))
-        .withColumn("cy", F.explode(F.sequence(cy0, cy1)))
-        .withColumn("cell_id", linear_id_col(F.col("cx"), F.col("cy")))
-    )
-    idx = index_df.select("cell_id", "image_id", "bytes", "fmt", "ul_x", "ul_y", "px", "w", "h")
+    lons, lats = F.col("ring.lon"), F.col("ring.lat")    # array<double> each
+    north = F.lit(WORLD_Y0)
+    cx0 = F.floor((F.array_min(lons) - WORLD_X0) / TILE_DEG).cast("long")
+    cx1 = F.floor((F.array_max(lons) - WORLD_X0) / TILE_DEG).cast("long")
+    cy0 = F.floor((north - F.array_max(lats)) / TILE_DEG).cast("long")
+    cy1 = F.floor((north - F.array_min(lats)) / TILE_DEG).cast("long")
+    p = polygons_df.select("poly_id", "ring",
+                           F.explode(F.sequence(cx0, cx1)).alias("cx"),
+                           cy0.alias("cy0"), cy1.alias("cy1"))
+    cx = F.col("cx")
+    p = p.select("poly_id", "ring", F.explode(F.sequence(
+        linear_id_col(cx, F.col("cy0")), linear_id_col(cx, F.col("cy1")),
+        F.lit(NCELL_X).cast("long"))).alias("cell_id"))
     if index_strategy == "broadcast":
-        return idx.join(F.broadcast(p.select("poly_id", "ring", "cell_id")),
-                        "cell_id", "inner")
+        return index_df.join(F.broadcast(p), "cell_id", "inner")
     # shuffle path: spread the (polygon, cell) pairs BEFORE the join —
     # query tables often arrive as one small parquet file (one scan
     # task), which would funnel every pixel-mask kernel invocation into
@@ -105,7 +99,7 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
     if spread:
         spark = polygons_df.sparkSession
         p = p.repartition(spark.sparkContext.defaultParallelism * 2, "poly_id", "cell_id")
-    return p.join(idx, "cell_id", "inner")
+    return p.join(index_df, "cell_id", "inner")
 
 
 # Arrow boundary carries only the irreducible columns; image_id / x / y
@@ -122,8 +116,8 @@ PIXEL_SCHEMA = T.StructType(
 )
 
 
-def with_pixel_coords(df: DataFrame) -> DataFrame:
-    """Derive (image_id, x, y) from global pixel indices as Columns.
+def pixel_coord_cols(gx: Column, gy: Column) -> dict[str, Column]:
+    """(image_id, x, y) from global pixel indices, as Columns.
 
     Exactly the arithmetic of the tile captions (sources/fixtures.py
     ``tile_caption``) and the numpy centroid computation:
@@ -131,17 +125,20 @@ def with_pixel_coords(df: DataFrame) -> DataFrame:
     identical double operations in identical order, so values are
     bit-equal to computing them inside the Arrow kernel.
     """
-    from ..constants import PX, TILE_PX
+    tx = (gx / TILE_PX).cast("long")
+    ty = (gy / TILE_PX).cast("long")
+    ul_x = F.lit(WORLD_X0) + tx * TILE_DEG
+    ul_y = F.lit(WORLD_Y0) - ty * TILE_DEG
+    return {
+        "image_id": F.format_string("tile_%05d_%05d", tx, ty),
+        "x": ul_x + ((gx - tx * TILE_PX) + 0.5) * PX,
+        "y": ul_y - ((gy - ty * TILE_PX) + 0.5) * PX,
+    }
 
-    tx = (F.col("gx") / TILE_PX).cast("long")
-    ty = (F.col("gy") / TILE_PX).cast("long")
-    ul_x = F.lit(WORLD_X0) + tx * F.lit(TILE_DEG)
-    ul_y = F.lit(WORLD_Y0) - ty * F.lit(TILE_DEG)
-    return (
-        df.withColumn("image_id", F.format_string("tile_%05d_%05d", tx, ty))
-        .withColumn("x", ul_x + ((F.col("gx") - tx * TILE_PX) + F.lit(0.5)) * F.lit(PX))
-        .withColumn("y", ul_y - ((F.col("gy") - ty * TILE_PX) + F.lit(0.5)) * F.lit(PX))
-    )
+
+def with_pixel_coords(df: DataFrame) -> DataFrame:
+    """``df`` (…, gx, gy) plus its pixels' (image_id, x, y)."""
+    return df.withColumns(pixel_coord_cols(F.col("gx"), F.col("gy")))
 
 
 def _pixel_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -362,7 +359,7 @@ def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame,
     """Covered-pixel runs as per-(polygon, tile) packed blobs —
     the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA)."""
     idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
+    j = polygon_tile_join(polygons_df, idx,
                           index_strategy=index_strategy, spread=spread)
     return j.mapInPandas(_pixel_run_blobs, schema=RUN_BLOB_SCHEMA)
 
@@ -372,7 +369,7 @@ def polygon_pixel_runs(polygons_df: DataFrame, images_df: DataFrame,
                        spread: bool = True) -> DataFrame:
     """Covered-pixel scanline runs: (poly_id, gy, gx0, zs)."""
     idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
+    j = polygon_tile_join(polygons_df, idx,
                           index_strategy=index_strategy, spread=spread)
     return j.mapInPandas(_pixel_runs, schema=RUN_SCHEMA)
 
@@ -419,17 +416,15 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
     if emit == "runs":
         runs = polygon_pixel_runs(polygons_df, images_df,
                                   index_strategy=index_strategy, spread=spread)
-        px = runs.select(
-            "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")
-        ).select(
-            "poly_id",
-            (F.col("gx0") + F.col("pos")).alias("gx"),
-            "gy",
-            F.col("z").cast("int").alias("z"),
-        )
-        return with_pixel_coords(px)
+        px = runs.select("poly_id", "gy", "gx0",
+                         F.posexplode("zs").alias("pos", "z"))
+        gx = F.col("gx0") + F.col("pos")
+        gy = F.col("gy")
+        return px.select(
+            "poly_id", gx.alias("gx"), "gy", F.col("z").cast("int").alias("z"),
+            *(c.alias(n) for n, c in pixel_coord_cols(gx, gy).items()))
     idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
+    j = polygon_tile_join(polygons_df, idx,
                           index_strategy=index_strategy, spread=spread)
     return with_pixel_coords(j.mapInPandas(_pixel_rows, schema=PIXEL_SCHEMA))
 

@@ -30,7 +30,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -177,22 +177,29 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
     return idx.mapInPandas(decode, schema=schema)
 
 
-def gather_z_jvm(df: DataFrame, z_col: str = "z") -> DataFrame:
-    """JVM pixel sample over a join that already carries ``pix``.
-
-    ``df`` must carry (pix, w, h, ix, iy).  Out-of-range / missing-tile
-    rows get NULL (ANSI-safe: element_at is guarded).
-    """
+def z_jvm_col(ix: Column | None = None, iy: Column | None = None) -> Column:
+    """JVM pixel sample as a Column over rows carrying (pix, w, h) and
+    the pixel indices — the ``ix``/``iy`` columns unless given as
+    expressions.  Out-of-range / missing-tile rows get NULL (ANSI-safe:
+    element_at is guarded)."""
+    ix = F.col("ix") if ix is None else ix
+    iy = F.col("iy") if iy is None else iy
     in_range = (
         F.col("pix").isNotNull()
-        & (F.col("ix") >= 0) & (F.col("ix") < F.col("w"))
-        & (F.col("iy") >= 0) & (F.col("iy") < F.col("h"))
+        & (ix >= 0) & (ix < F.col("w"))
+        & (iy >= 0) & (iy < F.col("h"))
     )
     z = F.when(
         in_range,
-        F.element_at(F.col("pix"), (F.col("iy") * F.col("w") + F.col("ix") + 1).cast("int")),
+        F.element_at(F.col("pix"), (iy * F.col("w") + ix + 1).cast("int")),
     )
-    return df.withColumn(z_col, z.cast("int")).drop("pix")
+    return z.cast("int")
+
+
+def gather_z_jvm(df: DataFrame, z_col: str = "z") -> DataFrame:
+    """JVM pixel sample over a join that already carries ``pix``:
+    adds ``z_col`` (see :func:`z_jvm_col`) and drops ``pix``."""
+    return df.withColumn(z_col, z_jvm_col()).drop("pix")
 
 
 def gather_z(df: DataFrame, images_df: DataFrame, z_col: str = "z",

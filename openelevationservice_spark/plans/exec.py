@@ -56,6 +56,14 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
+def plan_node_count(df: DataFrame, node: str) -> int:
+    """Number of ``node`` operators (e.g. ``"Project"``) in the analyzed
+    logical plan — one per DataFrame step that adds that operator."""
+    tree = df._jdf.queryExecution().analyzed().treeString()  # noqa: SLF001
+    return sum(1 for line in tree.splitlines()
+               if line.lstrip(" :+-").split(" ", 1)[0] == node)
+
+
 def assert_broadcast_join(df: DataFrame) -> None:
     plan = explain_str(df)
     assert "BroadcastHashJoin" in plan, f"expected broadcast join, got:\n{plan}"

@@ -5,6 +5,11 @@ configs apply on a real cluster via ``spark-submit --py-files`` (see
 ``plans/submit.py``).  AQE + skew-join handling are on by default per
 the north rule (skewed dense tiles), Arrow is on because every
 Python-side operator is pandas-UDF-vectorized.
+
+PySpark's DataFrame call-site capture is off: with it on, every Column
+function call pays extra driver↔JVM round trips (active-session lookup,
+a conf read, an origin set/clear), which more than doubled the planning
+round trips of a single request.
 """
 
 from __future__ import annotations
@@ -12,6 +17,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """A quarter of physical RAM (the JVM's own max-heap ergonomics),
+    between 1 and 24 GiB; ``OES_DRIVER_MEM`` overrides it."""
+    env = os.environ.get("OES_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(phys // 4 // 2**20, 1024), 24 * 1024)}m"
 
 
 def build_session(app: str = "oes-spark", cpus: int | None = None,
@@ -34,7 +49,7 @@ def build_session(app: str = "oes-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("OES_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         # size the WHOLE JVM to the requested core count: local[N] caps
         # task slots only — GC, JIT and Netty pools otherwise size to the
         # physical machine, which silently gives a local[2] "cluster"
@@ -42,6 +57,7 @@ def build_session(app: str = "oes-spark", cpus: int | None = None,
         .config("spark.driver.extraJavaOptions",
                 f"-XX:ActiveProcessorCount={cpus}")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra or {}).items():

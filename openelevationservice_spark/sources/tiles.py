@@ -13,6 +13,9 @@ No Python runs in this builder — it is whole-stage-codegen'd end to end.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,13 +34,31 @@ CAPTION_SCHEMA = T.StructType(
 )
 
 
+#: built tile indexes per images DataFrame (weakly held): the index is a
+#: pure projection of that immutable DataFrame, so every polygon and
+#: colour call over the same images reuses one plan instead of paying
+#: its analysis again
+_INDEXES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_INDEXES_LOCK = threading.Lock()
+
+
 def tile_index(images_df: DataFrame, with_bytes: bool = False) -> DataFrame:
-    """(image_id, w, h, fmt, ul_x, ul_y, px, tx, ty, cell_id, bbox...).
+    """(image_id, w, h, fmt, ul_x, ul_y, px, nodata, [bytes], tx, ty,
+    cell_id, min_x, max_x, max_y, min_y).
 
     ``cell_id`` is the base-resolution linear cell id; because tiles are
     grid-aligned with half-open extents, one tile == one cell and the
     point→tile spatial join becomes an exact equi-join (SURVEY.md §2.3 J1).
+    Built once per ``images_df`` object and flag, then reused.
     """
+    with _INDEXES_LOCK:
+        built = _INDEXES.setdefault(images_df, {})
+        if with_bytes not in built:
+            built[with_bytes] = _build_tile_index(images_df, with_bytes)
+        return built[with_bytes]
+
+
+def _build_tile_index(images_df: DataFrame, with_bytes: bool) -> DataFrame:
     c = F.from_json(F.col("caption"), CAPTION_SCHEMA).alias("c")
     df = images_df.select(
         "image_id", "w", "h", "fmt",
@@ -47,16 +68,22 @@ def tile_index(images_df: DataFrame, with_bytes: bool = False) -> DataFrame:
         c.getField("nodata").alias("nodata"),
         *(["bytes"] if with_bytes else []),
     )
-    df = (
-        df.withColumn("tx", F.round((F.col("ul_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long"))
-        .withColumn("ty", F.round((F.lit(WORLD_Y0) - F.col("ul_y")) / F.lit(TILE_DEG)).cast("long"))
-        .withColumn("cell_id", (F.col("ty") * F.lit(NCELL_X) + F.col("tx")).cast("long"))
-        .withColumn("min_x", F.col("ul_x"))
-        .withColumn("max_x", F.col("ul_x") + F.col("w") * F.col("px"))
-        .withColumn("max_y", F.col("ul_y"))
-        .withColumn("min_y", F.col("ul_y") - F.col("h") * F.col("px"))
+    # one projection for every derived column: each DataFrame step
+    # re-analyses the whole plan, which costs more than the query on a
+    # per-request plan
+    ul_x, ul_y, px = F.col("ul_x"), F.col("ul_y"), F.col("px")
+    tx = F.round((ul_x - WORLD_X0) / TILE_DEG).cast("long")
+    ty = F.round((F.lit(WORLD_Y0) - ul_y) / TILE_DEG).cast("long")
+    return df.select(
+        "*",
+        tx.alias("tx"),
+        ty.alias("ty"),
+        (ty * NCELL_X + tx).cast("long").alias("cell_id"),
+        ul_x.alias("min_x"),
+        (ul_x + F.col("w") * px).alias("max_x"),
+        ul_y.alias("max_y"),
+        (ul_y - F.col("h") * px).alias("min_y"),
     )
-    return df
 
 
 def morton_col(tx, ty) -> "F.Column":
