@@ -42,6 +42,9 @@ _PREF = ((1, 0, 3), (2, 1, 0), (3, 2, 1), (0, 3, 2))
 #: packing shift for (y, x) → one int64 sort key; local spans are far
 #: inside 32 bits (a band is bounded by one polygon's bbox).
 _KSH = 32
+#: the tracer's edge key is dir << 60 | y << 32 | x, so local vertex y
+#: must stay below 2^28 (asserted in _trace_loops_keys).
+_TRACE_Y_MAX = 1 << 28
 
 
 def _sorted_presence(keys: np.ndarray, probe: np.ndarray) -> np.ndarray:
@@ -63,27 +66,29 @@ def _cell_keys(gx: np.ndarray, gy: np.ndarray):
         return np.empty(0, dtype=np.int64), 0, 0
     x0 = int(gx.min())
     y0 = int(gy.min())
+    # vertices reach local x + 1, which must not carry into the y field
+    if int(gx.max()) - x0 + 1 >= 1 << _KSH:
+        raise AssertionError(
+            "band spans 2^32 or more columns: outside the 32-bit key field")
     return np.unique(((gy - y0) << _KSH) | (gx - x0)), x0, y0
 
 
-def _trace_loops_fast(gx: np.ndarray, gy: np.ndarray):
-    """Boundary loops of the pixel set, as (loops, areas2).
+#: quadrant-bit values for quad_counts (a=1, b=2, c=4, d=8)
+_QBITS = np.array([1, 2, 4, 8], dtype=np.int8)
+
+
+def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
+    """Boundary loops of the pixel set, as (loops, areas2), over
+    sorted-unique LOCAL cell keys; (x0, y0) is the bbox origin re-added
+    to the emitted GLOBAL loop vertices.
 
     Cell-centric successor construction: every directed boundary edge
     has exactly ONE successor under the turn rule (a pure function of
     the 2×2 cell occupancy at its head vertex).  Neighbor occupancy and
     the (tail vertex, dir) → edge-id lookup both run as
     ``np.searchsorted`` probes of sorted packed (y, x) keys, so the
-    whole construction is O(E log E) in the EDGE count — the former
-    dense-grid form allocated and memset O(4·bbox-area) id grids per
-    band, which at ~23 bands per polygon re-touched every polygon's
-    bbox ~90× per dissolve (the measured r6 kernel owner).  Only the
-    final cycle walk chases plain lists.
-
-    Edge enumeration order (direction-major, then row-major over
-    cells) is identical to the dense-grid form — sorted packed keys
-    ARE row-major order — so loops, starting vertices and output order
-    are bit-identical (asserted in tests/test_geometry_dissolve.py).
+    whole construction is O(E log E) in the EDGE count, never in the
+    bbox area.  Only the final cycle walk chases plain lists.
 
     Returns ``loops`` (list of vertex lists, tails only, not closed,
     GLOBAL grid coords) and ``areas2`` (twice the shoelace area per
@@ -92,19 +97,12 @@ def _trace_loops_fast(gx: np.ndarray, gy: np.ndarray):
     U: −x} of its tail, and the per-loop sum is translation-invariant,
     so the per-edge contributions are precomputed vectorized.
     """
-    ck, x0, y0 = _cell_keys(gx, gy)
-    return _trace_loops_keys(ck, x0, y0)
-
-
-#: quadrant-bit values for quad_counts (a=1, b=2, c=4, d=8)
-_QBITS = np.array([1, 2, 4, 8], dtype=np.int8)
-
-
-def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
-    """Tracer body over sorted-unique LOCAL cell keys; (x0, y0) is the
-    bbox origin re-added to the emitted GLOBAL loop vertices."""
     if len(ck) == 0:
         return [], []
+    # the largest vertex y is the last cell's y + 1 (keys are sorted)
+    if int(ck[-1] >> _KSH) + 1 >= _TRACE_Y_MAX:
+        raise AssertionError(
+            "band spans 2^28 or more rows: outside the tracer's edge-key bound")
     cy = ck >> _KSH
     cx = ck & ((1 << _KSH) - 1)
     nbr_delta = (-(1 << _KSH), 1, (1 << _KSH), -1)   # top/right/bottom/left
@@ -173,9 +171,10 @@ def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
 
 
 #: field widths of the batched cell key: band << 46 | ly << 23 | lx.
-#: Local (bbox-shifted) coords are far inside 23 bits; the band index
-#: gets 16 bits (the edge key puts the direction in bits 62..63), so one
-#: pass covers at most 2^16 bands and larger batches run in chunks.
+#: Local (bbox-shifted) coords are far inside 23 bits (asserted, vertex
+#: coords included); the band index gets 16 bits (the edge key puts the
+#: direction in bits 62..63), so one pass covers at most 2^16 bands and
+#: larger batches run in chunks.
 _BSH_BAND = 46
 _BSH_Y = 23
 _BMASK = (1 << _BSH_Y) - 1
@@ -231,6 +230,11 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     y0b = np.minimum.reduceat(gy, seg[:-1])
     lx = gx - x0b[band]
     ly = gy - y0b[band]
+    # vertices reach lx + 1 / ly + 1, and neighbor probes must not
+    # carry out of the 23-bit fields
+    if max(int(lx.max()), int(ly.max())) + 1 >= 1 << _BSH_Y:
+        raise AssertionError(
+            "band spans 2^23 or more cells on an axis: outside the 23-bit packing bound")
     ck = np.unique((band << _BSH_BAND) | (ly << _BSH_Y) | lx)
     cb = ck >> _BSH_BAND
     cy = (ck >> _BSH_Y) & _BMASK
@@ -335,30 +339,6 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     return shells, holes, area2, q1, q3, qd, has_neg
 
 
-def _signed_area2(loop) -> int:
-    """Twice the shoelace signed area (integer-exact)."""
-    s = 0
-    n = len(loop)
-    for i in range(n):
-        x1, y1 = loop[i]
-        x2, y2 = loop[(i + 1) % n]
-        s += x1 * y2 - x2 * y1
-    return s
-
-
-def _point_in_loop(px: float, py: float, loop) -> bool:
-    inside = False
-    n = len(loop)
-    for i in range(n):
-        x1, y1 = loop[i]
-        x2, y2 = loop[(i + 1) % n]
-        if (y1 > py) != (y2 > py):
-            xint = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
-            if px < xint:
-                inside = not inside
-    return inside
-
-
 def _loop_arrays(loop):
     """(x1, y1, x2, y2) edge arrays of a loop (not closed) — cached per
     shell by the hole-attachment pass."""
@@ -368,24 +348,14 @@ def _loop_arrays(loop):
 
 
 def _point_in_loop_np(px: float, py: float, arrs) -> bool:
-    """Vectorized twin of :func:`_point_in_loop`: identical per-edge
-    float arithmetic, crossing-parity count — order-independent, so the
-    boolean matches the scalar loop exactly."""
+    """Even-odd point-in-loop over a loop's edge arrays: the parity of
+    the edges crossing the horizontal ray to the right of the point."""
     x1, y1, x2, y2 = arrs
     cross = (y1 > py) != (y2 > py)
     if not cross.any():
         return False
     xint = x1[cross] + (py - y1[cross]) / (y2[cross] - y1[cross]) * (x2[cross] - x1[cross])
     return bool(int((px < xint).sum()) & 1)
-
-
-def _dense_grid(gx: np.ndarray, gy: np.ndarray):
-    """Boolean occupancy grid over the cell bbox + its origin."""
-    x0 = int(gx.min())
-    y0 = int(gy.min())
-    g = np.zeros((int(gy.max()) - y0 + 1, int(gx.max()) - x0 + 1), dtype=bool)
-    g[gy - y0, gx - x0] = True
-    return g, x0, y0
 
 
 def dissolve_pixels_rings(gx: np.ndarray, gy: np.ndarray):
@@ -445,63 +415,6 @@ def dissolve_pixels(gx: np.ndarray, gy: np.ndarray):
     return dissolve_pixels_rings(gx, gy)[0]
 
 
-def _n_components(g: np.ndarray, conn: int) -> int:
-    """Connected components of a boolean grid (conn ∈ {4, 8}) — adjacency
-    pairs extracted with numpy shifts, merged with union-find.  Python
-    touches only the O(#adjacencies) pair list, never the full grid.
-
-    Scale note: band groups are bounded by a single polygon's pixel
-    count (the operator shards by (poly_id, height_base)); the 100 TB
-    path keeps per-group labeling local exactly because of that bound.
-    """
-    n = int(g.sum())
-    if n == 0:
-        return 0
-    idx = np.full(g.shape, -1, dtype=np.int64)
-    idx[g] = np.arange(n)
-    parent = np.arange(n)
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    shifts = [((slice(None), slice(None, -1)), (slice(None), slice(1, None))),
-              ((slice(None, -1), slice(None)), (slice(1, None), slice(None)))]
-    if conn == 8:
-        shifts += [((slice(None, -1), slice(None, -1)), (slice(1, None), slice(1, None))),
-                   ((slice(None, -1), slice(1, None)), (slice(1, None), slice(None, -1)))]
-    for sa, sb in shifts:
-        m = g[sa] & g[sb]
-        for a, b in zip(idx[sa][m].tolist(), idx[sb][m].tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-    return len({find(a) for a in range(n)})
-
-
-def label_counts(gx: np.ndarray, gy: np.ndarray) -> tuple[int, int, int, int]:
-    """(C4, C8, H4, H8) for the cell set: foreground components under 4-
-    and 8-connectivity, and background holes under 4- and 8-connectivity
-    (bounded background components inside a 1-cell-padded bbox, minus
-    the single outer component).
-
-    These are the Euler-number building blocks — Gray's quad-count
-    formula gives χ4 = C4 − H8 = (Q1 − Q3 + 2·QD)/4 and
-    χ8 = C8 − H4 = (Q1 − Q3 − 2·QD)/4, which is how the SQL oracle
-    verifies the dissolve (contract query ``color_dissolve``).
-    """
-    g, _, _ = _dense_grid(np.asarray(gx), np.asarray(gy))
-    bg = ~np.pad(g, 1)
-    return (
-        _n_components(g, 4),
-        _n_components(g, 8),
-        _n_components(bg, 4) - 1,
-        _n_components(bg, 8) - 1,
-    )
-
-
 #: popcount of a 4-bit quadrant mask (see quad_counts)
 _POP4 = np.array([bin(i).count("1") for i in range(16)], dtype=np.int8)
 
@@ -511,7 +424,7 @@ def quad_counts(gx: np.ndarray, gy: np.ndarray) -> tuple[int, int, int]:
     (Q1, Q3, QD) with QD = diagonal two-pixel windows.  Euler numbers
     follow as χ4 = (Q1 − Q3 + 2·QD)/4 = C4 − H8 and
     χ8 = (Q1 − Q3 − 2·QD)/4 = C8 − H4 (property-tested against
-    :func:`label_counts` in tests/test_geometry_dissolve.py).
+    union-find labelling, ``label_counts`` in tests/oracles.py).
 
     Every occupied cell contributes a quadrant bit to exactly 4 vertex
     windows (a=top-left…d=bottom-right of the 2×2); grouping the 4·n
@@ -546,13 +459,3 @@ def _quad_counts_keys(ck: np.ndarray) -> tuple[int, int, int]:
     q3 = int((pc == 3).sum())
     qd = int(((masks == 6) | (masks == 9)).sum())
     return q1, q3, qd
-
-
-def dissolve_area_px(polys) -> float:
-    """Total area (in pixel units) of a dissolve result — for tests."""
-    total = 0.0
-    for rings in polys:
-        for i, ring in enumerate(rings):
-            a = _signed_area2(ring[:-1]) / 2.0
-            total += a
-    return total

@@ -13,8 +13,8 @@ pixel list explodes driver memory (SURVEY.md §3.3); here the whole
 pipeline stays distributed::
 
     polygons → rasterizer: one packed run blob per (polygon, tile),
-               with the pair's min/max z
-             → per-polygon min/max over those scalars, broadcast back
+               with the pair's min/max/sum of z and pixel count
+             → per-polygon stats over those scalars, broadcast back
              → band-split kernel: runs → band subruns, partially
                aggregated per (polygon, band) of each Arrow batch into
                one binary buffer
@@ -24,10 +24,9 @@ pipeline stays distributed::
 
 Bands dissolve independently, exactly as the reference unions per band,
 so the largest polygon's bands spread across tasks.  Only the final
-FeatureCollection is collected.  The JVM-array run shape
-(``runs_df=`` / ``cells_shape="runs"``) and the exploded-pixel shape
-(``pixels_df=`` / ``cells_shape="pixels"``) are kept as asserted
-parity twins.
+FeatureCollection is collected.  tests/oracles.py holds the reference
+form of the whole pipeline (pixel rows → JVM band arithmetic → per-band
+dissolve), asserted equal to this one in tests/test_polygon.py.
 """
 
 from __future__ import annotations
@@ -40,10 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import NUM_RANGES, PX, WORLD_X0, WORLD_Y0
-from ..functions.dissolve import dissolve_pixels_rings, quad_counts
+from ..functions.dissolve import dissolve_pixels_rings
 from ..plans.cache import lease
-from .polygon import (polygon_pixel_run_blobs, polygon_pixel_runs,
-                      polygon_pixels, runs_stats)
+from .polygon import blob_stats, polygon_pixel_run_blobs
 
 
 def polygon_stats(pixels_df: DataFrame) -> DataFrame:
@@ -114,46 +112,6 @@ def _dissolve_partitions(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
-#: gx/gy pack base for the band-cell transfer (gxy = gx * 2^32 + gy);
-#: a global pixel grid at SRTM-like resolution is ~10^6 cells per axis,
-#: far inside the 32-bit halves.
-_GXY = 1 << 32
-
-
-def _banded_cells(pixels: DataFrame, num_ranges: int) -> DataFrame:
-    """One row per (poly_id, height_base): the band's cells as ONE packed
-    ``array<long>`` column.
-
-    This is the operator's Arrow-boundary diet (round-5 decomposition,
-    BENCH/SCALE.md): shipping the 9.9M banded pixel rows into the python
-    kernel as 4 scalar columns was +2.75 s at local[32] — ~35 % of the
-    query — while the kernel's own compute is noise (~0.3 s).  Packing
-    (gx, gy) into one long and gathering each band with a co-partitioned
-    ``collect_list`` cuts per-value Arrow writes 4× and row overhead
-    ~430× (one row per band), and replaces the sortWithinPartitions +
-    python-side group streaming entirely; the agg adds no JVM cost (the
-    `agg_jvm` variant times identical to the former sort shape).
-
-    The explicit ``repartition`` count is load-bearing (AQE straggler
-    tail otherwise — see the partition-count plan test); ``groupBy`` on
-    the same keys reuses that exchange, so the agg is partial-free but
-    exchange-free too.  Peak task memory is one band's cell array —
-    the same bound as the python kernel's dense-grid materialization,
-    which has always been the operator's per-band bound (the reference
-    dissolves a bbox request's bands driver-side; continental single
-    bands need a tiled dissolve in ANY shape).
-    """
-    stats = polygon_stats(pixels)
-    banded = with_height_base(pixels, stats, num_ranges)
-    gxy = (F.col("gx").cast("long") * F.lit(_GXY) + F.col("gy")).alias("gxy")
-    return (
-        banded.select("poly_id", "height_base", gxy)
-        .repartition(_dissolve_partitions(banded), "poly_id", "height_base")
-        .groupBy("poly_id", "height_base")
-        .agg(F.collect_list("gxy").alias("cells"))
-    )
-
-
 #: subrun packing: one long per band-subrun, gy<<40 | gx0<<16 | len.
 #: gx gets 24 bits (16.7M cells); gy gets 23 — bits 40..62 — so the
 #: packed value stays inside SIGNED int64 (a 24-bit gy would reach the
@@ -180,50 +138,6 @@ SUBRUN_SCHEMA = T.StructType(
         T.StructField("subs", T.BinaryType()),
     ]
 )
-
-
-def _band_subrun_kernel(num_ranges: int):
-    """Vectorized band-split of scanline runs → packed band-subruns.
-
-    Input rows: (poly_id, gy, gx0, zs, min_z, max_z) — the pixel-run
-    table joined with the broadcast per-polygon stats.  The kernel
-    flattens every run in the batch into one z vector, applies the
-    exact reference band arithmetic (``querybuilder.py:56-102``; the
-    same IEEE-double expression as :func:`with_height_base`, so both
-    shapes bucket identically), and splits runs at band-change
-    boundaries — pure numpy, no per-run python loop.  Terrain is
-    locally smooth, so subrun count ~ run count, not pixel count:
-    the downstream exchange ships ~run-many longs instead of
-    pixel-many rows (the measured r5 transfer term).
-
-    The packed subruns are PARTIALLY AGGREGATED before they leave the
-    kernel (guide §2.3 "aggregate before you shuffle"): one output row
-    per (poly_id, height_base) group *of the batch*, carrying that
-    group's subruns as one ``array<long>`` — the r6 measurement showed
-    the synthetic z field band-splits almost every step (7.8M subruns
-    from 9.9M pixels), so per-subrun rows re-created the per-pixel
-    Arrow/exchange row volume the runs diet was meant to remove.  The
-    final gather flattens the partials (same multiset of packed longs;
-    every consumer rasterizes, so order never matters)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            zs_list = pdf["zs"].to_numpy()
-            lens = np.fromiter((len(v) for v in zs_list), np.int64,
-                               count=len(zs_list))
-            if int(lens.sum()) == 0:
-                continue
-            z = np.concatenate([np.asarray(v, dtype=np.int64) for v in zs_list])
-            out = _subrun_partial_frame(
-                pdf["poly_id"].to_numpy(), pdf["gy"].to_numpy(),
-                pdf["gx0"].to_numpy(), lens, z,
-                pdf["min_z"].to_numpy(), pdf["max_z"].to_numpy(), num_ranges)
-            if out is not None:
-                yield out
-
-    return kernel
 
 
 def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
@@ -275,13 +189,24 @@ def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
     )
 
 
-def _band_subrun_kernel_blob(num_ranges: int):
-    """Blob twin of :func:`_band_subrun_kernel`: input rows are
-    (poly_id, blob, min_z, max_z) from
+def _band_subrun_kernel(num_ranges: int):
+    """Vectorized band-split of packed scanline runs → packed band-subruns.
+
+    Input rows are (poly_id, blob, min_z, max_z, …) from
     :func:`~..operators.polygon.polygon_pixel_run_blobs` joined with the
-    broadcast stats.  Unpacks every pair's runs with ``np.frombuffer``
-    views (z never existed as a JVM array) and band-splits the whole
-    batch in one vectorized pass."""
+    broadcast per-polygon stats.  The kernel unpacks every pair's runs
+    with ``np.frombuffer`` views (z never exists as a JVM array),
+    applies the exact reference band arithmetic
+    (``querybuilder.py:56-102``; the same IEEE-double expression as
+    :func:`with_height_base`) to the whole batch at once, and splits runs
+    at band changes.  Terrain is locally smooth, so the subrun count
+    follows the run count, not the pixel count.
+
+    The subruns are PARTIALLY AGGREGATED before they leave the kernel:
+    one output row per (poly_id, height_base) group *of the batch*,
+    carrying that group's subruns as one binary buffer (see
+    :func:`_subrun_partial_frame`).  The final gather concatenates the
+    partials; every consumer rasterizes, so order never matters."""
 
     def kernel(batches):
         for pdf in batches:
@@ -316,24 +241,6 @@ def _band_subrun_kernel_blob(num_ranges: int):
     return kernel
 
 
-def _banded_subruns(runs: DataFrame, num_ranges: int) -> DataFrame:
-    """One row per (poly_id, height_base): the band's packed subruns.
-
-    The runs-resident successor of :func:`_banded_cells` (kept as the
-    parity twin): the persisted/aggregated/shuffled unit is the
-    scanline run, never the exploded pixel row.  vs the pixel shape
-    this removes the 9.9M-row posexplode+persist, the pixel-row stats
-    scan (JVM array_min/array_max over runs instead), the 9.9M-long
-    exchange (ships ~run-many packed subruns) and the 9.9M-value
-    collect_list — the kernel re-expands cells from subruns with one
-    np.repeat.  Results are asserted frame-identical to the pixel
-    shape in tests/test_polygon.py."""
-    stats = runs_stats(runs).select("poly_id", "min_z", "max_z")
-    j = runs.join(F.broadcast(stats), "poly_id")
-    subs = j.mapInPandas(_band_subrun_kernel(num_ranges), SUBRUN_SCHEMA)
-    return _gather_bands(subs)
-
-
 def _gather_bands(subs: DataFrame) -> DataFrame:
     """(poly, band)-exchange + gather of the map-side subrun partials.
     The gathered column is ``array<binary>`` (one packed buffer per
@@ -346,19 +253,16 @@ def _gather_bands(subs: DataFrame) -> DataFrame:
     )
 
 
-def _banded_subruns_blob(blobs: DataFrame, num_ranges: int) -> DataFrame:
-    """One row per (poly_id, height_base) from the run blobs: stats
-    aggregate over the blob table's scalar per-pair min/max columns (no
-    array fold), broadcast back, and the band-split unpacks the packed
-    runs in Python — z values cross the JVM boundary exactly twice,
-    both times as one binary buffer memcpy.  The kernel reads its
-    columns by name, so the join output goes to it unpruned (the
-    per-pair run_min/run_max scalars ride along)."""
-    stats = (blobs.groupBy("poly_id")
-             .agg(F.min("run_min").alias("min_z"),
-                  F.max("run_max").alias("max_z")))
-    j = blobs.join(F.broadcast(stats), "poly_id")
-    subs = j.mapInPandas(_band_subrun_kernel_blob(num_ranges), SUBRUN_SCHEMA)
+def _banded_subruns(blobs: DataFrame, num_ranges: int) -> DataFrame:
+    """One row per (poly_id, height_base) from the run blobs: the
+    per-polygon stats (:func:`~..operators.polygon.blob_stats`, an
+    aggregate over the blob table's per-pair scalars) are broadcast
+    back, and the band-split unpacks the packed runs in Python — z
+    values cross the JVM boundary exactly twice, both times as one
+    binary buffer memcpy.  The kernel reads its columns by name, so the
+    join output goes to it unpruned (the per-pair scalars ride along)."""
+    j = blobs.join(F.broadcast(blob_stats(blobs)), "poly_id")
+    subs = j.mapInPandas(_band_subrun_kernel(num_ranges), SUBRUN_SCHEMA)
     return _gather_bands(subs)
 
 
@@ -405,26 +309,7 @@ def _iter_subrun_groups(batches):
             yield int(pid), int(hb), gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]]
 
 
-def _iter_cell_groups(batches):
-    """(poly_id, height_base, gx, gy) per band row.  collect_list order
-    is nondeterministic, but every kernel consumer rasterizes the cells
-    into an occupancy grid first — order-invariant by construction."""
-    for pdf in batches:
-        for pid, hb, cells in zip(pdf["poly_id"].to_numpy(),
-                                  pdf["height_base"].to_numpy(),
-                                  pdf["cells"].to_numpy()):
-            arr = np.asarray(cells, dtype=np.int64)
-            yield int(pid), int(hb), arr >> 32, arr & (_GXY - 1)
-
-
 def _dissolve_partition(batches):
-    rows = []
-    for pid, hb, gx, gy in _iter_cell_groups(batches):
-        rows.extend(_dissolve_group(pid, hb, gx, gy))
-    yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-
-def _dissolve_partition_subs(batches):
     rows = []
     for pid, hb, gx, gy in _iter_subrun_groups(batches):
         rows.extend(_dissolve_group(pid, hb, gx, gy))
@@ -435,34 +320,25 @@ def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
                            num_ranges: int = NUM_RANGES,
                            index_strategy: str = "broadcast",
                            spread: bool = True,
-                           pixels_df: DataFrame | None = None,
-                           runs_df: DataFrame | None = None) -> DataFrame:
+                           blobs_df: DataFrame | None = None) -> DataFrame:
     """Distributed equivalent of ``group_and_union_geometries``.
 
     Returns one row per dissolved feature:
     (poly_id, height_base, feature_idx, n_rings, area_px, rings).
 
-    Default shape is runs-resident (see :func:`_banded_subruns`); pass
-    ``runs_df`` (an already-built — typically already-persisted —
-    ``polygon_pixel_runs`` result for the same polygons) to reuse one
-    rasterization across stats and dissolve; the caller then owns its
+    Pass ``blobs_df`` (an already-built — typically already-leased —
+    :func:`~..operators.polygon.polygon_pixel_run_blobs` result for the
+    same polygons) to share one rasterization with other consumers such
+    as :func:`~..operators.polygon.blob_stats`; the caller then owns its
     cache lifecycle and this operator takes no lease of its own.
-    ``pixels_df`` selects the pixel-shape parity twin the same way.
     """
-    if pixels_df is not None:
-        return _banded_cells(pixels_df, num_ranges).mapInPandas(
-            _dissolve_partition, schema=FEATURE_SCHEMA
-        )
-    if runs_df is not None:
-        return _banded_subruns(runs_df, num_ranges).mapInPandas(
-            _dissolve_partition_subs, schema=FEATURE_SCHEMA
-        )
-    blobs = polygon_pixel_run_blobs(polygons_df, images_df,
-                                    index_strategy=index_strategy,
-                                    spread=spread)
-    lease("color_features", blobs)
-    return _banded_subruns_blob(blobs, num_ranges).mapInPandas(
-        _dissolve_partition_subs, schema=FEATURE_SCHEMA
+    if blobs_df is None:
+        blobs_df = polygon_pixel_run_blobs(polygons_df, images_df,
+                                           index_strategy=index_strategy,
+                                           spread=spread)
+        lease("color_features", blobs_df)
+    return _banded_subruns(blobs_df, num_ranges).mapInPandas(
+        _dissolve_partition, schema=FEATURE_SCHEMA
     )
 
 
@@ -521,12 +397,6 @@ def _invariants_group(poly_id: int, hb: int, gx: np.ndarray,
 
 
 def _invariants_partition(batches):
-    rows = [_invariants_group(pid, hb, gx, gy)
-            for pid, hb, gx, gy in _iter_cell_groups(batches)]
-    yield pd.DataFrame(rows, columns=[f.name for f in INVARIANT_SCHEMA.fields])
-
-
-def _invariants_partition_subs(batches):
     """Batched invariants: one vectorized pass per Arrow batch
     (functions.dissolve.batch_invariants — successor permutation +
     min-label doubling, no per-edge Python walk, no ring vertex
@@ -582,33 +452,15 @@ def _invariants_partition_subs(batches):
 def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame,
                              num_ranges: int = NUM_RANGES,
                              index_strategy: str = "broadcast",
-                             spread: bool = True,
-                             cells_shape: str = "blob") -> DataFrame:
+                             spread: bool = True) -> DataFrame:
     """Per-band dissolve invariants (poly_id, height_base, area_px,
     euler4, euler8) — the oracle-checkable face of the dissolve (G3).
-    Same plan shape as :func:`polygon_color_features`.  The default
-    rasterizes straight to packed run BLOBS (r6); ``cells_shape="runs"``
-    selects the r5 runs-resident twin (JVM zs arrays),
-    ``cells_shape="pixels"`` the exploded-pixel parity twin."""
-    if cells_shape == "pixels":
-        pixels = polygon_pixels(polygons_df, images_df,
-                                index_strategy=index_strategy, spread=spread)
-        lease("color_invariants", pixels)
-        return _banded_cells(pixels, num_ranges).mapInPandas(
-            _invariants_partition, schema=INVARIANT_SCHEMA
-        )
-    if cells_shape == "runs":
-        runs = polygon_pixel_runs(polygons_df, images_df,
-                                  index_strategy=index_strategy, spread=spread)
-        lease("color_invariants", runs)
-        return _banded_subruns(runs, num_ranges).mapInPandas(
-            _invariants_partition_subs, schema=INVARIANT_SCHEMA
-        )
+    Same plan shape as :func:`polygon_color_features`."""
     blobs = polygon_pixel_run_blobs(polygons_df, images_df,
                                     index_strategy=index_strategy, spread=spread)
     lease("color_invariants", blobs)
-    return _banded_subruns_blob(blobs, num_ranges).mapInPandas(
-        _invariants_partition_subs, schema=INVARIANT_SCHEMA
+    return _banded_subruns(blobs, num_ranges).mapInPandas(
+        _invariants_partition, schema=INVARIANT_SCHEMA
     )
 
 

@@ -2,20 +2,17 @@
 
 Not part of the reference (a request/response elevation service), but
 first-class for the 100 TB engine: exact dedup, MinHash+LSH candidate
-generation, n-gram Jaccard verification, and SimHash — all pure
-DataFrame/Column expressions (JVM-side, whole-stage codegen; no Python
-in any hot path), each with an ANSI-SQL twin for the DuckDB oracle.
+generation, n-gram Jaccard verification, and SimHash.  MinHash
+signatures come from one Arrow kernel (:func:`minhash_signature`);
+everything else is DataFrame/Column expressions (JVM-side, whole-stage
+codegen).  Each operator has an ANSI-SQL twin for the DuckDB oracle.
 
 Hash choice: md5 (available and bit-identical in Spark and DuckDB);
-MinHash hashes each distinct shingle ONCE (md5 hex prefix → 32-bit int,
-the same conv trick the simhash oracle uses) and derives the n hash
+MinHash hashes each shingle ONCE (md5 hex prefix → 32-bit int, the
+same conv trick the simhash oracle uses) and derives the n hash
 functions as integer permutations ``h_i(x) = (a_i*x + b_i) mod 2^31-1``
-— the standard universal min-wise family.  The former design took the
-lexicographic min over n *seeded md5 hex strings* per shingle; that is
-also a valid family but allocates n strings per shingle, and the string
-churn was the measured scaling limiter at volume (single-JVM allocator
-contention, BENCH/BASELINE.md).  The permutation family is pure codegen
-int arithmetic after one md5 — and equally oracle-expressible.
+— the standard universal min-wise family: int arithmetic after one
+md5, and equally oracle-expressible.
 """
 
 from __future__ import annotations
@@ -48,14 +45,6 @@ def minhash_perm_consts(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def shingle_base_hash(sh: Column) -> Column:
-    """32-bit unsigned int from the md5 hex prefix of a shingle.
-
-    DuckDB twin: ``('0x' || substr(md5(sh), 1, 8))::BIGINT`` (the same
-    expression pair simhash uses for word hashes)."""
-    return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("bigint")
-
-
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text.
 
@@ -84,56 +73,27 @@ def word_shingles(text: Column, n: int) -> Column:
 
 
 def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                      n_hashes: int = 8, shingle_n: int = 3,
-                      impl: str = "kernel") -> DataFrame:
+                      n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
     """(id, sig: array<bigint>) — per-doc MinHash signature.
 
     sig[i] = min over shingles of (a_i * md5prefix(shingle) + b_i) mod
     2^31-1 (see module docstring for the family).  MIN is
     duplicate-invariant, so no DISTINCT is needed over the shingles.
-    Docs with no shingle produce no row in every shape.
+    Docs with no shingle (or null text) produce no row.
 
-    ``impl="kernel"`` (default, r6): shingling + hashing + the n mins
-    run in an Arrow kernel — python ``str.split``/``" ".join`` +
-    ``hashlib.md5`` per shingle and one ``np.minimum.reduceat`` per
-    hash function (guide §4.2: the Column shapes evaluate the shingle
-    construction and md5 through interpreted higher-order functions at
-    ~an order of magnitude more per-shingle cost; measured full-LSH
-    2.58 → 1.51 s at a ×16 corpus, gap growing with volume).
-    Exactness: python ``split(" ")`` keeps leading/empty/trailing
-    tokens exactly like Spark's regex split with limit −1, ``join``
-    matches ``concat_ws`` over non-null strings, and the int64
-    permutation arithmetic is overflow-audited (module docstring) —
-    signatures are frame-identical across all three impls (tested).
-
-    ``impl="arrays"`` is the exchange-free pure-Column twin (base
-    hashes + mins as array transforms, zero exchanges);
-    :func:`minhash_signature_explode` the explode + map-side-combine
-    twin (codegen md5, one exchange) whose shape mirrors the SQL
-    oracle.
+    Shingling + hashing + the n mins run in an Arrow kernel — python
+    ``str.split``/``" ".join`` + ``hashlib.md5`` per shingle and one
+    ``np.minimum.reduceat`` per hash function (guide §4.2: Column
+    shapes evaluate the shingle construction and md5 through
+    interpreted higher-order functions at ~an order of magnitude more
+    per-shingle cost; measured full-LSH 2.58 → 1.51 s at a ×16 corpus,
+    gap growing with volume).  Exactness: python ``split(" ")`` keeps
+    leading/empty/trailing tokens exactly like the SQL oracle's
+    ``string_split`` (and Spark's regex split with limit −1), and the
+    int64 permutation arithmetic is overflow-audited (module
+    docstring).  tests/oracles.py holds a pure-Python MinHash the
+    kernel is asserted equal to.
     """
-    if impl == "arrays":
-        xs = F.transform(word_shingles(F.col(text_col), shingle_n),
-                         lambda s: shingle_base_hash(s))
-        # Shingle-bearing docs filter on the RAW column (size(words) >=
-        # n ⟺ the shingle array is nonempty): a filter on the derived
-        # _xs column would be pushed below the projection by
-        # substitution, evaluating the whole md5-transform subtree
-        # twice per row (the guide §4.4 duplication, expression-level —
-        # measured 2× on the bench corpus).
-        d = (df.filter(F.size(F.split(F.col(text_col), " ")) >= shingle_n)
-             .select(F.col(id_col), xs.alias("_xs")))
-        mins = [
-            F.array_min(F.transform(
-                "_xs", lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MERSENNE31)
-            )).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_perm_consts(n_hashes))
-        ]
-        d = d.select(id_col, *mins)
-        return d.select(id_col, F.array(*[F.col(f"h{i}")
-                                          for i in range(n_hashes)]).alias("sig"))
-    if impl != "kernel":
-        raise ValueError(f"unknown minhash_signature impl {impl!r}")
     consts = minhash_perm_consts(n_hashes)
     a_vec = np.array([a for a, _ in consts], dtype=np.int64)
     b_vec = np.array([b for _, b in consts], dtype=np.int64)
@@ -174,25 +134,6 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             yield pd.DataFrame({id_col: pd.Series(ids), "sig": list(sigs)})
 
     return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
-
-
-def minhash_signature_explode(df: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text",
-                              n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """Explode + groupBy twin of :func:`minhash_signature` (codegen md5
-    per exploded shingle row, n parallel partial-agg mins, one
-    exchange) — the right shape when per-core CPU, not exchange count,
-    is the binding constraint."""
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh")
-    )
-    shx = sh.select(F.col(id_col), shingle_base_hash(F.col("sh")).alias("_x"))
-    aggs = [
-        F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(MERSENNE31)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_perm_consts(n_hashes))
-    ]
-    sig = shx.groupBy(id_col).agg(*aggs)
-    return sig.select(id_col, F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

@@ -25,7 +25,6 @@ from __future__ import annotations
 import hashlib
 import itertools
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -87,9 +86,9 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     frame and ran ``sort_values`` + ``groupby().head`` per batch, whose
     object churn in the shared heap was the measured 2→8-core scaling
     regression (BENCH/SCALE.md r4 A/B: the numpy cut is ~2× faster per
-    batch and restores ann_topk eff ≥ its r2 level).  ``impl="pandas"``
-    keeps the old kernel selectable for A/B runs; key columns with
-    object dtype also fall back to it (lexsort needs primitive keys).
+    batch and restores ann_topk eff ≥ its r2 level).  Key columns with
+    object dtype (string ids) fall back to a pandas sort + ``head`` cut
+    automatically (lexsort needs primitive keys).
 
     ``scored`` should be pre-projected to (query_id, corpus_id, sim):
     extra columns are carried through the Arrow boundary and cost
@@ -97,12 +96,6 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     """
     schema = scored.schema
     cols = [f.name for f in schema.fields]
-    impl = os.environ.get("OES_TOPK_PRUNE", "numpy")
-
-    def _cut_pandas(both: pd.DataFrame) -> pd.DataFrame:
-        both = both.sort_values([query_id, sim_col, corpus_id],
-                                ascending=[True, False, True], kind="stable")
-        return both.groupby(query_id, sort=False).head(k)
 
     def prune_pandas(batches):
         carry = None
@@ -110,7 +103,9 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
             if not len(pdf):
                 continue
             both = pdf if carry is None else pd.concat([carry, pdf], ignore_index=True)
-            carry = _cut_pandas(both)
+            carry = (both.sort_values([query_id, sim_col, corpus_id],
+                                      ascending=[True, False, True], kind="stable")
+                     .groupby(query_id, sort=False).head(k))
         yield carry if carry is not None else pd.DataFrame(columns=cols)
 
     def prune_numpy(batches):
@@ -120,7 +115,7 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
                 continue
             if arrs is None:
                 if any(pdf[c].dtype == object for c in (query_id, sim_col, corpus_id)):
-                    # non-primitive keys: delegate to the pandas kernel.
+                    # non-primitive keys: delegate to the pandas cut.
                     # chain() keeps streaming batch-at-a-time — list(batches)
                     # would materialize the rest of the partition at once,
                     # voiding the bounded O(q·k + batch) memory contract
@@ -147,9 +142,7 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
             arrs = {c: a[keep] for c, a in arrs.items()}
         yield pd.DataFrame(arrs) if arrs is not None else pd.DataFrame(columns=cols)
 
-    pruned = scored.mapInPandas(
-        prune_pandas if impl == "pandas" else prune_numpy, schema=schema
-    )
+    pruned = scored.mapInPandas(prune_numpy, schema=schema)
     w2 = Window.partitionBy(query_id).orderBy(F.desc(sim_col), F.col(corpus_id))
     return (
         pruned.withColumn("rank", F.row_number().over(w2))
@@ -217,8 +210,7 @@ def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
 def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
                 corpus_id: str = "vec_id", corpus_vec: str = "embedding",
                 query_id: str = "q_id", query_vec: str = "q_vec",
-                method: str = "arrow", vec_dtype: str = "float32",
-                arrow_impl: str = "batch") -> DataFrame:
+                method: str = "arrow", vec_dtype: str = "float32") -> DataFrame:
     """Exact brute-force top-k: (q_id, rank, vec_id, sim).
 
     The query side is tiny by construction (it rides inside the scoring
@@ -226,12 +218,9 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     final per-query window ranks only ≤ P·k survivors.
 
     ``method="arrow"`` (default, the scale path) fuses scoring and the
-    per-partition top-k prune into ONE python kernel (``arrow_impl=
-    "batch"``, the default, runs it over raw ``mapInArrow`` record
-    batches — the corpus matrix is a buffer view, no per-row python
-    objects; ``arrow_impl="pandas"`` is the ``mapInPandas`` twin kept
-    for A/B — both share the same scoring/prune code paths): each
-    Arrow batch of corpus vectors is scored against every query with a
+    per-partition top-k prune into ONE python kernel over raw
+    ``mapInArrow`` record batches (the corpus matrix is a buffer view,
+    no per-row python objects): each Arrow batch of corpus vectors is scored against every query with a
     *sequential-in-dimension* accumulation loop — the identical IEEE
     operation order as the JVM fold / the SQL oracle's ``list_reduce``
     (acc = ((0 + x₀y₀) + x₁y₁) + …, norms as sequential squared sums,
@@ -310,8 +299,8 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     np_dtype = np.dtype(vec_dtype).newbyteorder("<")
 
     def _score(mat):
-        # sequential-in-dimension fold: identical IEEE order across the
-        # pandas and arrow-batch kernels, the JVM fold and the SQL oracle
+        # sequential-in-dimension fold: identical IEEE order to the JVM
+        # fold and the SQL oracle
         n = mat.shape[0]
         dots = np.zeros((n, nq))
         cacc = np.zeros(n)
@@ -346,27 +335,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     def score_prune(batches):
         best_c = [None] * nq
         best_s = [None] * nq
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[corpus_id].to_numpy()
-            raw = pdf[corpus_vec].to_numpy()
-            if is_packed:
-                mat = (np.frombuffer(b"".join(raw), dtype=np_dtype)
-                       .reshape(len(raw), dim).astype(np.float64))
-            else:
-                mat = np.stack(raw).astype(np.float64)
-            _update(best_c, best_s, cids, _score(mat))
-        if best_s[0] is None:
-            return
-        yield _finish(best_c, best_s)
-
-    def score_prune_arrow(batches):
-        # mapInArrow twin: the corpus matrix is a view of the Arrow
-        # buffers (no per-row bytes/ndarray objects, no join copy) —
-        # the transfer-side python cost the pandas kernel still paid.
-        best_c = [None] * nq
-        best_s = [None] * nq
         for rb in batches:
             if not rb.num_rows:
                 continue
@@ -381,13 +349,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
         yield pa.RecordBatch.from_pandas(_finish(best_c, best_s),
                                          preserve_index=False)
 
-    sel = corpus_df.select(corpus_id, corpus_vec)
-    if arrow_impl == "batch":
-        pruned = sel.mapInArrow(score_prune_arrow, schema)
-    elif arrow_impl == "pandas":
-        pruned = sel.mapInPandas(score_prune, schema)
-    else:
-        raise ValueError(f"unknown cosine_topk arrow_impl {arrow_impl!r}")
+    pruned = corpus_df.select(corpus_id, corpus_vec).mapInArrow(score_prune, schema)
     w2 = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.col(corpus_id))
     return (
         pruned.withColumn("rank", F.row_number().over(w2))

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from openelevationservice_spark.operators import dedup
 
+import oracles
+
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -215,36 +217,36 @@ def test_connected_components_unpersists_on_nonconvergence(spark, monkeypatch):
 
 
 def test_minhash_signature_twins_equal(spark, docs):
-    """All three signature impls — the r6 Arrow kernel (default), the
-    exchange-free array-resident Column shape, and the explode +
-    groupBy twin — must be frame-identical."""
-    from openelevationservice_spark.operators.dedup import (
-        minhash_signature, minhash_signature_explode)
+    """The Arrow MinHash kernel equals the pure-Python hashlib MinHash
+    oracle on the document fixture."""
+    from openelevationservice_spark.operators.dedup import minhash_signature
 
-    a = minhash_signature(docs, n_hashes=8).orderBy("doc_id").toPandas()
-    b = minhash_signature_explode(docs, n_hashes=8).orderBy("doc_id").toPandas()
-    c = minhash_signature(docs, n_hashes=8, impl="arrays").orderBy("doc_id").toPandas()
-    assert a["doc_id"].tolist() == b["doc_id"].tolist() == c["doc_id"].tolist()
-    assert ([list(x) for x in a["sig"]] == [list(x) for x in b["sig"]]
-            == [list(x) for x in c["sig"]])
+    got = minhash_signature(docs, n_hashes=8).orderBy("doc_id").toPandas()
+    want = oracles.minhash(DOCS, n_hashes=8, shingle_n=3)
+    assert got["doc_id"].tolist() == sorted(want)
+    assert [list(x) for x in got["sig"]] == [want[d] for d in sorted(want)]
 
 
 def test_minhash_signature_kernel_edge_texts(spark):
-    """Kernel/Column parity on edge inputs: empty text, consecutive and
-    trailing spaces (Spark regex split with limit -1 vs python
-    str.split), sub-shingle docs, null text."""
-    import pandas as pd
+    """Kernel vs the pure-Python oracle on edge inputs: empty text,
+    consecutive and trailing spaces (Spark/DuckDB split keeps empty
+    tokens like python str.split(" ")), sub-shingle docs, null text."""
+    from openelevationservice_spark.operators.dedup import minhash_signature
 
-    from openelevationservice_spark.operators.dedup import (
-        minhash_signature, minhash_signature_explode)
-
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5, 6],
-        "text": ["", "a b", "a  b c ", " leading space here", None,
-                 "one two three four"],
-    })
-    df = spark.createDataFrame(pdf, schema="doc_id long, text string")
-    a = minhash_signature(df, n_hashes=4).orderBy("doc_id").toPandas()
-    b = minhash_signature_explode(df, n_hashes=4).orderBy("doc_id").toPandas()
-    assert a["doc_id"].tolist() == b["doc_id"].tolist()
-    assert [list(x) for x in a["sig"]] == [list(x) for x in b["sig"]]
+    rows = [(1, ""), (2, "a b"), (3, "a  b c "), (4, " leading space here"),
+            (5, None), (6, "one two three four")]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]),
+                               schema="doc_id long, text string")
+    got = minhash_signature(df, n_hashes=4).orderBy("doc_id").toPandas()
+    want = oracles.minhash(rows, n_hashes=4, shingle_n=3)
+    assert got["doc_id"].tolist() == sorted(want) == [3, 4, 6]
+    assert [list(x) for x in got["sig"]] == [want[d] for d in sorted(want)]
+    # the oracle's python split agrees with the Column shingler the SQL
+    # twins mirror (same shingles, empty tokens included)
+    sh = (df.filter(F.col("text").isNotNull())
+          .select("doc_id", dedup.word_shingles(F.col("text"), 3).alias("sh"))
+          .orderBy("doc_id").toPandas())
+    for doc_id, shingles in zip(sh["doc_id"], sh["sh"]):
+        words = dict(rows)[doc_id].split(" ")
+        assert list(shingles) == [" ".join(words[k:k + 3])
+                                  for k in range(len(words) - 2)]

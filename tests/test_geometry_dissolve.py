@@ -1,7 +1,9 @@
 import numpy as np
 
-from openelevationservice_spark.functions.dissolve import dissolve_area_px, dissolve_pixels
+from openelevationservice_spark.functions.dissolve import dissolve_pixels
 from openelevationservice_spark.functions.geometry import points_in_ring, ring_to_arrays
+
+from oracles import dissolve_area_px, label_counts, signed_area2
 
 
 def test_pip_square_inclusive_boundary():
@@ -71,7 +73,6 @@ def test_dissolve_big_random_area_matches_count():
 
 
 def test_label_counts_basic():
-    from openelevationservice_spark.functions.dissolve import label_counts
     # single cell
     assert label_counts(np.array([0]), np.array([0])) == (1, 1, 0, 0)
     # two diagonal cells: 2 comps at 4-conn, 1 at 8-conn, no holes
@@ -84,8 +85,6 @@ def test_label_counts_basic():
 def test_loops_match_labeling_random_grids():
     """Property: traced shells == C4; GEOS ring holes ∈ [H8, H4];
     shoelace area == pixel count — on 300 random grids."""
-    from openelevationservice_spark.functions.dissolve import (
-        _signed_area2, dissolve_pixels, label_counts)
     rng = np.random.default_rng(7)
     for _ in range(300):
         h, w = rng.integers(1, 11, 2)
@@ -96,7 +95,7 @@ def test_loops_match_labeling_random_grids():
         polys = dissolve_pixels(gx, gy)
         n_shells = len(polys)
         n_holes = sum(len(r) - 1 for r in polys)
-        area2 = sum(_signed_area2(r[:-1]) for rings in polys for r in rings)
+        area2 = sum(signed_area2(r[:-1]) for rings in polys for r in rings)
         c4, c8, h4, h8 = label_counts(gx, gy)
         assert c4 == n_shells
         assert h8 <= n_holes <= h4
@@ -106,8 +105,7 @@ def test_loops_match_labeling_random_grids():
 def test_quad_counts_match_labeling():
     """χ4/χ8 from the one-pass quad counts equal the labeling-derived
     Euler numbers on random grids (the in-kernel sandwich relies on it)."""
-    from openelevationservice_spark.functions.dissolve import (
-        dissolve_pixels, label_counts, quad_counts)
+    from openelevationservice_spark.functions.dissolve import quad_counts
     rng = np.random.default_rng(21)
     for _ in range(200):
         h, w = rng.integers(1, 11, 2)
@@ -162,3 +160,43 @@ def test_batch_invariants_matches_per_band():
         assert r["euler4"] == e4 and r["euler8"] == e8
         if not neg[b]:
             assert r["area_px"] == a2[b] // 2
+
+
+def test_batch_invariants_asserts_23_bit_local_bound():
+    """Local x/y (plus the +1 tail vertex) must stay below 2^23, the
+    width of the packed cell key's coordinate fields.  Two cells at
+    local x = 0 and x = 2^23 used to wrap into the y field and read as
+    one 2-cell shell (and a local y of 2^23 wrapped into the band
+    field); just inside the bound the answer is exact."""
+    import pytest
+
+    from openelevationservice_spark.functions.dissolve import batch_invariants
+
+    band, seg = np.zeros(2, dtype=np.int64), np.array([0, 2])
+    far = np.array([0, 1 << 23], dtype=np.int64)
+    zero = np.zeros(2, dtype=np.int64)
+    for gx, gy in ((far, zero), (zero, far), (far - 1, zero)):
+        with pytest.raises(AssertionError, match="23-bit"):
+            batch_invariants(band, gx, gy, 1, seg)
+    near = np.array([0, (1 << 23) - 2], dtype=np.int64)
+    for gx, gy in ((near, zero), (zero, near)):
+        shells, holes, area2, *_ = batch_invariants(band, gx, gy, 1, seg)
+        assert (shells[0], holes[0], area2[0]) == (2, 0, 4)
+
+
+def test_tracer_asserts_2_28_row_bound():
+    """The tracer's edge key packs dir << 60 | y << 32 | x, so a band's
+    local vertex y must stay below 2^28 and local vertex x below 2^32.
+    Two cells 2^28 rows apart used to collide with the direction bits
+    (ring areas 1/2 and (2^28 + 1)/2 instead of 1 and 1); just inside
+    the bound they trace as two unit squares."""
+    import pytest
+
+    with pytest.raises(AssertionError, match="2\\^28"):
+        dissolve_pixels(np.array([0, 0]), np.array([0, 1 << 28]))
+    # the x field is 32 bits: 2^32 columns apart used to read as adjacent
+    with pytest.raises(AssertionError, match="2\\^32"):
+        dissolve_pixels(np.array([0, 1 << 32]), np.array([0, 0]))
+    polys = dissolve_pixels(np.array([0, 0]), np.array([0, (1 << 28) - 2]))
+    assert len(polys) == 2
+    assert dissolve_area_px(polys) == 2.0

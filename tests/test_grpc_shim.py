@@ -75,14 +75,17 @@ def test_area_points_elevation(servicer, world):
         assert isinstance(p["elevation"], int)
 
 
-def test_area_ranges_elevation(servicer, world):
-    req = {
+def area_req(world):
+    return {
         "bottomLeft": {"lon": world.min_x + 0.1 * TILE_DEG,
                        "lat": world.max_y - 0.6 * TILE_DEG},
         "topRight": {"lon": world.min_x + 0.6 * TILE_DEG,
                      "lat": world.max_y - 0.1 * TILE_DEG},
     }
-    resp = servicer.AreaRangesElevation(req)
+
+
+def test_area_ranges_elevation(servicer, world):
+    resp = servicer.AreaRangesElevation(area_req(world))
     assert resp["unions"], "dissolve produced no bands"
     assert resp["minElevation"] <= resp["avgElevation"] <= resp["maxElevation"]
     for u in resp["unions"]:
@@ -102,28 +105,44 @@ def test_area_out_of_coverage_aborts(servicer):
 
 def test_area_ranges_single_pixel_dump(servicer, world, monkeypatch):
     """AreaRangesElevation rasterizes the polygon ONCE per RPC: the
-    leased scanline-run dump feeds both the stats collect and the
-    dissolve (the reference likewise fetches pixels once,
-    querybuilder.py:77-88).  The former shape rasterized twice."""
+    leased run blobs feed both the stats collect and the dissolve (the
+    reference likewise fetches pixels once, querybuilder.py:77-88).
+    Both the servicer's and the colour operator's rasterizer entry
+    points are counted, so a dissolve that rasterized again would
+    show."""
     import openelevationservice_spark.grpc_shim as shim
+    import openelevationservice_spark.operators.color as color
 
     calls = []
-    orig = shim.polygon_pixel_runs
+    orig = shim.polygon_pixel_run_blobs
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(shim, "polygon_pixel_runs", counting)
-    req = {
-        "bottomLeft": {"lon": world.min_x + 0.1 * TILE_DEG,
-                       "lat": world.max_y - 0.6 * TILE_DEG},
-        "topRight": {"lon": world.min_x + 0.6 * TILE_DEG,
-                     "lat": world.max_y - 0.1 * TILE_DEG},
-    }
-    resp = servicer.AreaRangesElevation(req)
+    monkeypatch.setattr(shim, "polygon_pixel_run_blobs", counting)
+    monkeypatch.setattr(color, "polygon_pixel_run_blobs", counting)
+    resp = servicer.AreaRangesElevation(area_req(world))
     assert resp["unions"]
     assert len(calls) == 1
+
+
+def test_area_ranges_stats_equal_pixel_stats(servicer, world):
+    """The RPC's min/max/avg (blob_stats over the leased blobs) equal
+    polygon_stats over the exploded pixel rows, bit for bit."""
+    from openelevationservice_spark.grpc_shim import _bbox_ring
+    from openelevationservice_spark.operators.color import polygon_stats
+    from openelevationservice_spark.operators.polygon import polygon_pixels
+
+    req = area_req(world)
+    resp = servicer.AreaRangesElevation(req)
+    svc = servicer.service
+    polys = svc.spark.createDataFrame(
+        [(0, [{"lon": x, "lat": y} for x, y in _bbox_ring(req)])],
+        schema="poly_id long, ring array<struct<lon:double,lat:double>>")
+    s = polygon_stats(polygon_pixels(polys, svc.images_df)).collect()[0]
+    assert (resp["minElevation"], resp["maxElevation"], resp["avgElevation"]) == (
+        s["min_z"], s["max_z"], s["avg_z"])
 
 
 def test_grpc_serve_over_local_socket(servicer, world):

@@ -12,6 +12,8 @@ from openelevationservice_spark.operators.line import (
 )
 from openelevationservice_spark.sources import fixtures as fx
 
+import oracles
+
 
 def densify_oracle(x1, y1, x2, y2):
     """Reference ST_LineInterpolatePoints semantics in plain Python."""
@@ -129,55 +131,42 @@ def test_line_assembly_ordered(spark, world, images):
             d_prev = d
 
 
-def test_densify_arrow_equals_sql(spark):
-    """The Arrow densify and the array-expression densify are the same
-    operator: identical rows bit-for-bit on a mixed batch (normal,
-    short, axis-aligned, zero-length lines)."""
-    import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines,
-        densify_lines_arrow,
-    )
+# normal, short, axis-aligned and zero-length lines, and a sub-pixel
+# line across the prime meridian whose one interpolated point has
+# t = 1.0 but rounds off P2, so only the t >= 1.0 rule drops it
+MIXED_LINES = pd.DataFrame({
+    "line_id": [1, 2, 3, 4, 5, 6],
+    "x1": [13.33, 13.33, 13.30, 13.31, 13.34, -1e-05],
+    "y1": [38.11, 38.11, 38.10, 38.12, 38.13, 38.1],
+    "x2": [13.34, 13.33, 13.30, 13.3101, 13.34001, 1e-06],
+    "y2": [38.12, 38.11, 38.14, 38.12, 38.13, 38.1],
+})
 
-    pdf = pd.DataFrame({
-        "line_id": [1, 2, 3, 4, 5],
-        "x1": [13.33, 13.33, 13.30, 13.31, 13.34],
-        "y1": [38.11, 38.11, 38.10, 38.12, 38.13],
-        "x2": [13.34, 13.33, 13.30, 13.3101, 13.34001],
-        "y2": [38.12, 38.11, 38.14, 38.12, 38.13],
-    })
-    lines = spark.createDataFrame(pdf)
-    a = densify_lines_arrow(lines).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines(lines).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b) > 5
-    for c in a.columns:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+
+def test_densify_arrow_equals_sql(spark):
+    """The vectorized numpy densify (``oracles.densify``) and the
+    surviving ``densify_lines`` both give the SQL reference vertex list
+    (ST_LineInterpolatePoints + DISTINCT + ORDER BY distance, in
+    ``densify_oracle``) for every line of the mixed batch: same
+    vertices, same order, bit for bit."""
+    want = oracles.densify(MIXED_LINES)
+    got = densify_lines(spark.createDataFrame(MIXED_LINES)).toPandas()
+    for r in MIXED_LINES.itertuples():
+        sql = densify_oracle(r.x1, r.y1, r.x2, r.y2)
+        for impl in (want, got):
+            sub = impl[impl.line_id == r.line_id].sort_values("seq")
+            assert list(sub.seq) == list(range(1, len(sql) + 1)), r.line_id
+            assert list(zip(sub.x, sub.y)) == sql, r.line_id
 
 
 def test_densify_explode_equals_arrow(spark):
-    """The whole-stage-codegen densify is the same operator as the Arrow
-    twin: identical rows bit-for-bit on a mixed batch."""
-    import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines_arrow,
-        densify_lines_explode,
-    )
-
-    pdf = pd.DataFrame({
-        "line_id": [1, 2, 3, 4, 5],
-        "x1": [13.33, 13.33, 13.30, 13.31, 13.34],
-        "y1": [38.11, 38.11, 38.10, 38.12, 38.13],
-        "x2": [13.34, 13.33, 13.30, 13.3101, 13.34001],
-        "y2": [38.12, 38.11, 38.14, 38.12, 38.13],
-    })
-    lines = spark.createDataFrame(pdf)
-    cols = ["line_id", "x1", "y1", "seq", "x", "y", "dist"]
-    a = densify_lines_arrow(lines).select(cols).toPandas().sort_values(
+    """The explode densify (``densify_lines``) equals the vectorized
+    numpy densify (``oracles.densify``) bit for bit on the mixed
+    batch, every column."""
+    got = densify_lines(spark.createDataFrame(MIXED_LINES)).toPandas().sort_values(
         ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines_explode(lines).select(cols).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b) > 5
-    for c in cols:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+    want = oracles.densify(MIXED_LINES)
+    assert list(got.columns) == oracles.DENSIFY_COLS
+    assert len(got) == len(want) > 5
+    for c in oracles.DENSIFY_COLS:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c

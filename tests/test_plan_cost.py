@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 
 from openelevationservice_spark import api
 from openelevationservice_spark.operators.color import (
-    _invariants_partition_subs,
+    _invariants_partition,
     polygon_color_invariants,
 )
 from openelevationservice_spark.operators.line import line_vertices_elevation
@@ -215,7 +215,7 @@ def test_invariants_kernel_takes_more_than_2_16_bands():
         "height_base": np.arange(n, dtype=np.int64) % 23,
         "subs": [[s.astype("<i8").tobytes()] for s in subs],
     })
-    out = pd.concat(list(_invariants_partition_subs(iter([pdf]))), ignore_index=True)
+    out = pd.concat(list(_invariants_partition(iter([pdf]))), ignore_index=True)
     assert len(out) == n
     assert (out["area_px"].to_numpy() == lens).all()
     assert (out["euler4"] == 1).all() and (out["euler8"] == 1).all()

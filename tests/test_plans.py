@@ -9,7 +9,7 @@ import pytest
 from openelevationservice_spark.plans import exec as ex
 from openelevationservice_spark.operators.point import point_elevation
 from openelevationservice_spark.operators.line import (
-    densify_lines_arrow,
+    densify_lines,
     line_vertices_elevation,
 )
 from openelevationservice_spark.operators.polygon import polygon_pixels
@@ -47,10 +47,19 @@ def test_point_plan_is_broadcast_equi_join(spark, images, pts):
 
 
 def test_densify_plan_has_no_exchange(spark):
-    lines = spark.createDataFrame(pd.DataFrame({
-        "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
-    plan = ex.explain_str(densify_lines_arrow(lines))
+    import oracles
+
+    pdf = pd.DataFrame({
+        "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]})
+    df = densify_lines(spark.createDataFrame(pdf))
+    plan = ex.explain_str(df)
     assert "Exchange" not in plan          # densify is shuffle-free
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan            # and JVM-only
+    got = df.toPandas().sort_values("seq").reset_index(drop=True)
+    want = oracles.densify(pdf)
+    for c in oracles.DENSIFY_COLS:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
 
 
 def test_line_plan_shape(spark, images, pts):

@@ -14,6 +14,8 @@ from openelevationservice_spark.operators.color import (
 from openelevationservice_spark.operators.polygon import polygon_elevation, polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
 
+import oracles
+
 
 def bbox_ring(x0, y0, x1, y1):
     return [
@@ -48,11 +50,35 @@ def world():
 
 
 @pytest.fixture(scope="module")
-def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+def images_pdf(world):
+    return fx.make_images_pdf(world)
+
+
+@pytest.fixture(scope="module")
+def images(spark, images_pdf):
+    df = spark.createDataFrame(images_pdf, schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df
+
+
+POLY_SCHEMA = "poly_id long, ring array<struct<lon:double, lat:double>>"
+
+
+def tri_and_box(world, tri_side, box_w, box_h, dy):
+    """Two polygons anchored at the same corner: a right triangle (the
+    general PIP path) and an axis-aligned box (the rectangle fast path)."""
+    x0 = world.min_x + 0.1 * TILE_DEG
+    y0 = world.max_y - dy * TILE_DEG
+    tri = [
+        {"lon": x0, "lat": y0},
+        {"lon": x0 + tri_side * TILE_DEG, "lat": y0},
+        {"lon": x0, "lat": y0 + tri_side * TILE_DEG},
+        {"lon": x0, "lat": y0},
+    ]
+    return pd.DataFrame({"poly_id": [0, 1],
+                         "ring": [tri, bbox_ring(x0, y0, x0 + box_w * TILE_DEG,
+                                                 y0 + box_h * TILE_DEG)]})
 
 
 def test_polygon_pixels_match_oracle(spark, world, images):
@@ -156,33 +182,33 @@ def test_color_features_cover_all_pixels(spark, world, images):
     assert set(feats.height_base) == set(banded.height_base)
 
 
-def test_pixel_runs_equal_pixel_rows(spark, world, images):
+def test_pixel_runs_equal_pixel_rows(spark, world, images, images_pdf):
     """The run-length-encoded kernel (rect fast path + JVM posexplode)
-    and the per-pixel kernel are the same operator — identical rows on
-    both a rectangle and a triangle (the general-PIP path)."""
-    x0 = world.min_x + 0.1 * TILE_DEG
-    y0 = world.max_y - 1.0 * TILE_DEG
-    tri = [
-        {"lon": x0, "lat": y0},
-        {"lon": x0 + TILE_DEG, "lat": y0},
-        {"lon": x0, "lat": y0 + TILE_DEG},
-        {"lon": x0, "lat": y0},
-    ]
-    schema = "poly_id long, ring array<struct<lon:double, lat:double>>"
-    polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0, 1],
-                      "ring": [tri, bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG,
-                                              y0 + 0.9 * TILE_DEG)]}),
-        schema=schema)
+    equals the per-pixel PIP oracle over the decoded tiles — identical
+    rows, coordinates bit-equal, on a rectangle, a triangle (the
+    general-PIP path) and a rectangle whose edges pass exactly through
+    pixel centroids (boundary pixels are covered)."""
+    # centroid = tile origin + (i + 0.5) * PX, the kernel's arithmetic;
+    # the box spans two tiles, so each edge uses its own tile's origin
+    ul_x0 = WORLD_X0 + world.tx0 * TILE_DEG
+    ul_x1 = WORLD_X0 + (world.tx0 + 1) * TILE_DEG
+    ul_y = WORLD_Y0 - world.ty0 * TILE_DEG
+    on_centroids = bbox_ring(ul_x0 + 5.5 * PX, ul_y - 30.5 * PX,
+                             ul_x1 + 10.5 * PX, ul_y - 7.5 * PX)
+    pdf = pd.concat([tri_and_box(world, 1.0, 0.7, 0.9, 1.0),
+                     pd.DataFrame({"poly_id": [2], "ring": [on_centroids]})],
+                    ignore_index=True)
+    polys = spark.createDataFrame(pdf, schema=POLY_SCHEMA)
     key = ["poly_id", "gx", "gy"]
     cols = key + ["z", "x", "y", "image_id"]
-    a = (polygon_pixels(polys, images, emit="runs").select(cols)
-         .toPandas().sort_values(key).reset_index(drop=True))
-    b = (polygon_pixels(polys, images, emit="rows").select(cols)
-         .toPandas().sort_values(key).reset_index(drop=True))
-    assert len(a) == len(b) > 100
+    got = (polygon_pixels(polys, images).select(cols)
+           .toPandas().sort_values(key).reset_index(drop=True))
+    want = (oracles.pixel_rows(pdf, images_pdf)[cols]
+            .sort_values(key).reset_index(drop=True))
+    assert len(got) == len(want) > 100
+    assert set(got["poly_id"]) == {0, 1, 2}
     for c in cols:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
 
 
 def test_is_axis_rect_detector():
@@ -238,76 +264,56 @@ def test_dissolve_bands_of_one_polygon_spread_across_tasks(spark, world, images)
     assert parts.groupby("height_base")["pid"].nunique().max() == 1
 
 
-def test_runs_stats_equal_pixel_stats(spark, world, images):
-    """runs_stats (JVM array folds over scanline runs) must be
-    value-identical to polygon_stats over the exploded pixel rows —
+def test_blob_stats_equal_pixel_stats(spark, world, images):
+    """blob_stats (aggregates of the run blobs' per-pair scalars) must
+    be value-identical to polygon_stats over the exploded pixel rows —
     including the double avg (exact integer sum / count in both)."""
     from openelevationservice_spark.operators.polygon import (
-        polygon_pixel_runs, runs_stats,
+        blob_stats, polygon_pixel_run_blobs,
     )
 
-    x0 = world.min_x + 0.1 * TILE_DEG
-    y0 = world.max_y - 1.0 * TILE_DEG
-    tri = [
-        {"lon": x0, "lat": y0},
-        {"lon": x0 + TILE_DEG, "lat": y0},
-        {"lon": x0, "lat": y0 + TILE_DEG},
-        {"lon": x0, "lat": y0},
-    ]
-    polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0, 1],
-                      "ring": [tri, bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG,
-                                              y0 + 0.9 * TILE_DEG)]}),
-        schema="poly_id long, ring array<struct<lon:double, lat:double>>")
-    a = (runs_stats(polygon_pixel_runs(polys, images))
+    polys = spark.createDataFrame(tri_and_box(world, 1.0, 0.7, 0.9, 1.0),
+                                  schema=POLY_SCHEMA)
+    a = (blob_stats(polygon_pixel_run_blobs(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
     b = (polygon_stats(polygon_pixels(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
+    assert len(b) == 2
     pd.testing.assert_frame_equal(a[list(b.columns)], b, check_dtype=False)
     assert (a["avg_z"].to_numpy() == b["avg_z"].to_numpy()).all()
 
 
 def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
-    """The runs-resident dissolve (band-split subruns, r5 default) and
-    the exploded-pixel twin are the same operator: identical invariants
-    AND identical traced features on both a rectangle (rect fast path)
-    and a triangle (general PIP, runs split across bands)."""
+    """The dissolve (packed run blobs → band-split subruns → batched
+    kernel) equals the pandas oracle over pixel rows — polygon_pixels +
+    with_height_base, then per band the ring dissolve and union-find
+    Euler numbers: identical invariants AND identical traced features,
+    on a rectangle (rect fast path) and a triangle (general PIP, runs
+    split across bands)."""
     from openelevationservice_spark.operators.color import (
         polygon_color_invariants,
     )
 
-    x0 = world.min_x + 0.1 * TILE_DEG
-    y0 = world.max_y - 1.6 * TILE_DEG
-    tri = [
-        {"lon": x0, "lat": y0},
-        {"lon": x0 + 1.4 * TILE_DEG, "lat": y0},
-        {"lon": x0, "lat": y0 + 1.4 * TILE_DEG},
-        {"lon": x0, "lat": y0},
-    ]
-    polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0, 1],
-                      "ring": [tri, bbox_ring(x0, y0, x0 + 0.8 * TILE_DEG,
-                                              y0 + 1.1 * TILE_DEG)]}),
-        schema="poly_id long, ring array<struct<lon:double, lat:double>>")
+    polys = spark.createDataFrame(tri_and_box(world, 1.4, 0.8, 1.1, 1.6),
+                                  schema=POLY_SCHEMA)
+    px = polygon_pixels(polys, images)
+    banded = (with_height_base(px, polygon_stats(px))
+              .select("poly_id", "gx", "gy", "height_base").toPandas())
+    want_inv, want_f = oracles.color_bands(banded)
 
     key = ["poly_id", "height_base"]
-    inv_new = (polygon_color_invariants(polys, images)
-               .toPandas().sort_values(key).reset_index(drop=True))
-    inv_old = (polygon_color_invariants(polys, images, cells_shape="pixels")
-               .toPandas().sort_values(key).reset_index(drop=True))
-    assert len(inv_new) == len(inv_old) > 10
-    pd.testing.assert_frame_equal(inv_new, inv_old)
+    inv = (polygon_color_invariants(polys, images)
+           .toPandas().sort_values(key).reset_index(drop=True))
+    assert len(inv) == len(want_inv) > 10
+    pd.testing.assert_frame_equal(inv, want_inv, check_dtype=False)
 
     fkey = key + ["feature_idx"]
-    f_new = (polygon_color_features(polys, images)
-             .toPandas().sort_values(fkey).reset_index(drop=True))
-    f_old = (polygon_color_features(
-                 polys, images, pixels_df=polygon_pixels(polys, images))
-             .toPandas().sort_values(fkey).reset_index(drop=True))
-    assert len(f_new) == len(f_old) > 10
-    for c in ("n_rings", "area_px"):
-        assert (f_new[c].to_numpy() == f_old[c].to_numpy()).all(), c
+    f = (polygon_color_features(polys, images)
+         .toPandas().sort_values(fkey).reset_index(drop=True))
+    assert len(f) == len(want_f) > 10
+    for c in fkey + ["n_rings", "area_px"]:
+        assert (f[c].to_numpy() == want_f[c].to_numpy()).all(), c
     # ring geometry: compare as canonical vertex tuples per feature
     def canon(rings):
         return tuple(tuple((p["x"], p["y"]) for p in ring) for ring in rings)
-    assert [canon(r) for r in f_new["rings"]] == [canon(r) for r in f_old["rings"]]
+    assert [canon(r) for r in f["rings"]] == list(want_f["rings"])

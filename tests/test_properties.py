@@ -13,10 +13,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from openelevationservice_spark.functions import cells, polyline as pl
-from openelevationservice_spark.functions.dissolve import (
-    _signed_area2,
-    dissolve_pixels,
-)
+from openelevationservice_spark.functions.dissolve import dissolve_pixels
+
+from oracles import signed_area2
 
 lon_s = st.floats(min_value=-179.99, max_value=179.99,
                   allow_nan=False, allow_infinity=False)
@@ -98,7 +97,7 @@ def test_dissolve_preserves_area_and_closes_rings(pixels):
     for rings in polys:
         for ring in rings:
             assert ring[0] == ring[-1]          # closed
-        total += sum(_signed_area2(r[:-1]) / 2.0 for r in rings)
+        total += sum(signed_area2(r[:-1]) / 2.0 for r in rings)
     assert total == len(pixels)
 
 
@@ -110,23 +109,19 @@ def test_dissolve_preserves_area_and_closes_rings(pixels):
     st.floats(38.0, 39.0, allow_nan=False),
 ), min_size=1, max_size=8))
 def test_densify_implementations_agree(spark, lines):
-    """The Arrow densify and the array-expression densify are the same
-    operator on arbitrary segments (incl. zero-length and near-seam)."""
+    """densify_lines and the numpy densify oracle agree bit for bit on
+    arbitrary segments (incl. zero-length and near-seam)."""
     import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines,
-        densify_lines_arrow,
-    )
+    import oracles
+    from openelevationservice_spark.operators.line import densify_lines
 
     pdf = pd.DataFrame(
         [(i, x1, y1, x2, y2) for i, (x1, y1, x2, y2) in enumerate(lines)],
         columns=["line_id", "x1", "y1", "x2", "y2"],
     )
-    df = spark.createDataFrame(pdf)
-    a = densify_lines_arrow(df).toPandas().sort_values(
+    got = densify_lines(spark.createDataFrame(pdf)).toPandas().sort_values(
         ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines(df).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b)
-    for c in a.columns:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+    want = oracles.densify(pdf)
+    assert len(got) == len(want)
+    for c in oracles.DENSIFY_COLS:
+        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c

@@ -4,6 +4,8 @@ import pytest
 
 from openelevationservice_spark.operators import similarity as sim
 
+import oracles
+
 
 @pytest.fixture(scope="module")
 def corpus_pdf():
@@ -169,46 +171,39 @@ def test_cosine_topk_packed_binary_is_bit_identical(spark, corpus, corpus_pdf):
     key = ["q_id", "rank"]
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)  # sims bit-equal, not approx
+    pd.testing.assert_frame_equal(got, want, check_exact=True)  # sims bit-equal
 
 
 def test_cosine_topk_arrow_batch_matches_pandas_kernel(spark, corpus, corpus_pdf):
-    """The mapInArrow kernel (buffer-view unpack, default) must be
-    bit-identical to the mapInPandas twin on BOTH corpus formats —
-    same sequential-fold op order, only the transfer differs."""
-    queries = spark.createDataFrame(
-        pd.DataFrame({"q_id": [0, 1], "q_vec": [corpus_pdf["embedding"][5],
-                                                corpus_pdf["embedding"][17]]}),
-        schema="q_id long, q_vec array<float>",
-    )
+    """The mapInArrow kernel (buffer-view unpack) equals the brute-force
+    oracle bit for bit on BOTH corpus formats (array<float> and packed
+    binary) — same sequential-fold op order, only the transfer differs."""
+    qpdf = pd.DataFrame({"q_id": [0, 1], "q_vec": [corpus_pdf["embedding"][5],
+                                                   corpus_pdf["embedding"][17]]})
+    queries = spark.createDataFrame(qpdf, schema="q_id long, q_vec array<float>")
+    want = oracles.cosine_topk(corpus_pdf, qpdf, k=5)
     key = ["q_id", "rank"]
     for fmt in (corpus, sim.pack_vectors(corpus, "embedding")):
-        got = (sim.cosine_topk(fmt, queries, k=5, arrow_impl="batch")
+        got = (sim.cosine_topk(fmt, queries, k=5)
                .toPandas().sort_values(key).reset_index(drop=True))
-        want = (sim.cosine_topk(fmt, queries, k=5, arrow_impl="pandas")
-                .toPandas().sort_values(key).reset_index(drop=True))
-        pd.testing.assert_frame_equal(got, want)  # sims bit-equal
-    with pytest.raises(ValueError, match="arrow_impl"):
-        sim.cosine_topk(corpus, queries, k=5, arrow_impl="nope")
+        pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                      check_exact=True)  # sims bit-equal
 
 
 def test_cosine_topk_arrow_batch_string_ids(spark, corpus_pdf):
     """String corpus/query ids flow through the arrow-batch kernel
-    (object-dtype to_numpy + lexsort tie-break) identically to the
-    pandas kernel."""
+    (object-dtype to_numpy + lexsort tie-break) and the top-k prune's
+    object-key fallback: results equal the brute-force oracle."""
     pdf = corpus_pdf.assign(vec_id=[f"doc{i:04d}" for i in range(len(corpus_pdf))])
     corpus_s = spark.createDataFrame(pdf, schema="vec_id string, embedding array<float>")
-    queries = spark.createDataFrame(
-        pd.DataFrame({"q_id": ["qa", "qb"], "q_vec": [pdf["embedding"][5],
-                                                      pdf["embedding"][17]]}),
-        schema="q_id string, q_vec array<float>",
-    )
+    qpdf = pd.DataFrame({"q_id": ["qa", "qb"], "q_vec": [pdf["embedding"][5],
+                                                         pdf["embedding"][17]]})
+    queries = spark.createDataFrame(qpdf, schema="q_id string, q_vec array<float>")
     key = ["q_id", "rank"]
-    got = (sim.cosine_topk(corpus_s, queries, k=5, arrow_impl="batch")
+    got = (sim.cosine_topk(corpus_s, queries, k=5)
            .toPandas().sort_values(key).reset_index(drop=True))
-    want = (sim.cosine_topk(corpus_s, queries, k=5, arrow_impl="pandas")
-            .toPandas().sort_values(key).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, oracles.cosine_topk(pdf, qpdf, k=5),
+                                  check_dtype=False, check_exact=True)
     assert got.loc[0, "vec_id"] == "doc0005"
 
 
